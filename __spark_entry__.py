@@ -176,25 +176,6 @@ def _s3_lang_filter(spark, sf):
 _S3_SQL = "SELECT doc_id, lang, source FROM documents WHERE lang IN ('en','de')"
 
 
-def _s4_include_glob(spark, sf):
-    from smart_pdf_md_spark.sources.tables import path_filter
-    return path_filter(_t(spark, sf, "documents"), include=["src1*"],
-                       path_col="source").select("doc_id", "source")
-
-
-_S4_SQL = "SELECT doc_id, source FROM documents WHERE source LIKE 'src1%'"
-
-
-def _s5_exclude_glob(spark, sf):
-    from smart_pdf_md_spark.sources.tables import path_filter
-    return path_filter(_t(spark, sf, "documents"), exclude=["src1*", "src2*"],
-                       path_col="source").select("doc_id", "source")
-
-
-_S5_SQL = ("SELECT doc_id, source FROM documents "
-           "WHERE source NOT LIKE 'src1%' AND source NOT LIKE 'src2%'")
-
-
 def _p1_textual(spark, sf):
     docs = _t(spark, sf, "documents")
     nows = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
@@ -225,51 +206,6 @@ SELECT doc_id,
             WHEN lang = 'en' THEN 'fast'
             ELSE 'marker' END AS route
 FROM documents
-"""
-
-
-def _a1_run_summary(spark, sf):
-    ev = _t(spark, sf, "events")
-    return ev.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("failures"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).alias("elapsed_sec"),
-    )
-
-
-_A1_SQL = """
-SELECT count(*) AS total,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS failures,
-       CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS elapsed_sec
-FROM events
-"""
-
-
-def _a2_first_error(spark, sf):
-    ev = _t(spark, sf, "events").filter(F.col("event_type") == "error")
-    return ev.agg(F.min_by("event_id", "ts").alias("first_error_event"),
-                  F.count("*").alias("n_errors"))
-
-
-_A2_SQL = ("SELECT arg_min(event_id, ts) AS first_error_event, "
-           "count(*) AS n_errors FROM events WHERE event_type = 'error'")
-
-
-def _a3_lang_stats(spark, sf):
-    docs = _t(spark, sf, "documents")
-    nows = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n"),
-        F.round(F.avg("n_chars"), 2).alias("avg_chars"),
-        F.round(F.avg(F.when(nows >= 200, 1.0).otherwise(0.0)) + 1e-9, 4).alias("textual_ratio"),
-    )
-
-
-_A3_SQL = """
-SELECT lang, count(*) AS n, round(avg(n_chars), 2) AS avg_chars,
-       round(avg(CASE WHEN length(regexp_replace(text, '\\s', '', 'g')) >= 200
-                 THEN 1.0 ELSE 0.0 END) + 1e-9, 4) AS textual_ratio
-FROM documents GROUP BY lang
 """
 
 
@@ -311,34 +247,6 @@ def _j5_semi(spark, sf):
         .select("c_custkey", "c_mktsegment")
 
 
-_J5_SQL = ("SELECT c_custkey, c_mktsegment FROM customer WHERE EXISTS "
-           "(SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 100000)")
-
-
-def _j6_full_outer(spark, sf):
-    o = _t(spark, sf, "orders").select("o_custkey").distinct()
-    c = _t(spark, sf, "customer").select("c_custkey")
-    j = o.join(c, o.o_custkey == c.c_custkey, "full_outer")
-    cls = (
-        F.when(F.col("o_custkey").isNotNull() & F.col("c_custkey").isNotNull(), "both")
-        .when(F.col("o_custkey").isNotNull(), "orders_only")
-        .otherwise("customer_only")
-    )
-    return j.select(cls.alias("presence")).groupBy("presence") \
-        .agg(F.count("*").alias("n"))
-
-
-_J6_SQL = """
-SELECT presence, count(*) AS n FROM (
-  SELECT CASE WHEN o.o_custkey IS NOT NULL AND c.c_custkey IS NOT NULL THEN 'both'
-              WHEN o.o_custkey IS NOT NULL THEN 'orders_only'
-              ELSE 'customer_only' END AS presence
-  FROM (SELECT DISTINCT o_custkey FROM orders) o
-  FULL OUTER JOIN customer c ON o.o_custkey = c.c_custkey
-) GROUP BY presence
-"""
-
-
 def _w1_topk(spark, sf):
     from pyspark.sql import Window
     o = _t(spark, sf, "orders")
@@ -355,23 +263,6 @@ FROM (SELECT o_orderpriority, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_orderpriority
                                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
       FROM orders) WHERE rn <= 3
-"""
-
-
-def _w2_running(spark, sf):
-    from pyspark.sql import Window
-    ev = _t(spark, sf, "events").filter(F.col("user_id") < 10)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    return ev.select("user_id", "event_id",
-                     F.round(F.sum("value").over(w), 2).alias("running_value"))
-
-
-_W2_SQL = """
-SELECT user_id, event_id,
-       round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_value
-FROM events WHERE user_id < 10
 """
 
 
@@ -395,40 +286,6 @@ SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_event
               THEN 1 ELSE 0 END AS new_sess
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ) GROUP BY user_id
-"""
-
-
-def _set_ops(spark, sf):
-    # union + except + intersect in ONE oracle-checked query (op-tagged rows)
-    # so the set-op family costs a single driver slot (the sweep caps at 50).
-    ev = _t(spark, sf, "events")
-    hi = ev.filter(F.col("value") > 150).select("event_type").distinct()
-    lo = ev.filter(F.col("value") < 50).select("event_type").distinct()
-    e_types = ev.filter(F.col("event_type").startswith("e")) \
-        .select("event_type").distinct()
-    early = ev.filter(F.col("user_id") < 3).select("event_type").distinct()
-    ue = (hi.union(lo).distinct().exceptAll(e_types)
-          .select(F.lit("union_except").alias("op"),
-                  F.col("event_type").alias("etype")))
-    ix = (hi.intersect(early)
-          .select(F.lit("intersect").alias("op"),
-                  F.col("event_type").alias("etype")))
-    return ue.unionAll(ix)
-
-
-_SET_SQL = """
-SELECT 'union_except' AS op, etype FROM (
-  (SELECT DISTINCT event_type AS etype FROM events WHERE value > 150
-   UNION SELECT DISTINCT event_type FROM events WHERE value < 50)
-  EXCEPT
-  SELECT DISTINCT event_type FROM events WHERE event_type LIKE 'e%'
-)
-UNION ALL
-SELECT 'intersect' AS op, etype FROM (
-  SELECT DISTINCT event_type AS etype FROM events WHERE value > 150
-  INTERSECT
-  SELECT DISTINCT event_type FROM events WHERE user_id < 3
-)
 """
 
 
@@ -468,46 +325,6 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-def _agg_rollup(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return (docs.rollup("lang", "source")
-            .agg(F.count("*").alias("n"),
-                 F.sum("n_chars").alias("chars"))
-            .select(F.coalesce("lang", F.lit("ALL")).alias("lang"),
-                    F.coalesce("source", F.lit("ALL")).alias("source"),
-                    "n", "chars"))
-
-
-_ROLLUP_SQL = """
-SELECT coalesce(lang, 'ALL') AS lang, coalesce(source, 'ALL') AS source,
-       count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-FROM documents GROUP BY ROLLUP (lang, source)
-"""
-
-
-def _events_tumbling(spark, sf):
-    ev = _t(spark, sf, "events")
-    return (ev.groupBy(F.date_trunc("hour", "ts").alias("hour_bucket"), "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("value"), 2).alias("sum_value")))
-
-
-_TUMBLING_SQL = """
-SELECT date_trunc('hour', ts) AS hour_bucket, event_type,
-       count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def _s2_single_file(spark, sf):
-    # targeted re-run of one row (reference: single-file input, core.py:1102)
-    return _t(spark, sf, "documents").filter(F.col("doc_id") == 42) \
-        .select("doc_id", "lang", "n_chars")
-
-
-_S2_SQL = "SELECT doc_id, lang, n_chars FROM documents WHERE doc_id = 42"
-
-
 def _j5b_salted_agg(spark, sf):
     from smart_pdf_md_spark.operators.skew import salted_agg
     # two-phase salted aggregation over a skewed key; result identical to a
@@ -533,40 +350,6 @@ SELECT doc_id, lang,
                   THEN (n_chars - avg(n_chars) OVER (PARTITION BY lang))
                        / stddev_pop(n_chars) OVER (PARTITION BY lang)
                   ELSE 0.0 END + 1e-9, 4) AS zscore
-FROM documents
-"""
-
-
-def _f1_json_extract(spark, sf):
-    ev = _t(spark, sf, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k_val"),
-    )
-
-
-_F1_SQL = ("SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) "
-           "AS k_val FROM events")
-
-
-def _f2_string_funcs(spark, sf):
-    docs = _t(spark, sf, "documents")
-    # stem/extension-style manipulation (SURVEY §2.8: core.py:204,293-295)
-    return docs.select(
-        "doc_id",
-        F.upper("lang").alias("lang_upper"),
-        F.substring("text", 1, 12).alias("prefix12"),
-        F.concat_ws("/", "source", "lang").alias("source_lang"),
-        F.regexp_extract("source", r"src(\d+)", 1).cast("int").alias("source_num"),
-        F.translate("lang", "aeiou", "AEIOU").alias("lang_tr"),
-    )
-
-
-_F2_SQL = """
-SELECT doc_id, upper(lang) AS lang_upper, substring(text, 1, 12) AS prefix12,
-       concat_ws('/', source, lang) AS source_lang,
-       CAST(regexp_extract(source, 'src(\\d+)', 1) AS INT) AS source_num,
-       translate(lang, 'aeiou', 'AEIOU') AS lang_tr
 FROM documents
 """
 
@@ -732,29 +515,6 @@ FROM r
 """
 
 
-def _text_lang_id(spark, sf):
-    return TS.lang_id(_t(spark, sf, "documents"))
-
-
-_LANG_ID_SQL = f"""
-WITH base AS (
-  SELECT doc_id, lang AS lang_declared,
-         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS tk
-  FROM documents
-), r AS (
-  SELECT doc_id, lang_declared,
-         CASE WHEN len(tk) = 0 THEN 0.0
-              ELSE len(list_filter(tk, t -> list_contains({_EN_SQL}, lower(t)))) * 1.0 / len(tk)
-         END AS ratio
-  FROM base
-)
-SELECT doc_id, lang_declared, round(ratio + 1e-9, 4) AS en_ratio,
-       CASE WHEN ratio >= 0.15 THEN 'en' ELSE 'other' END AS lang_pred
-FROM r
-"""
-
-
 def _text_fingerprint(spark, sf):
     return TS.fingerprint(_t(spark, sf, "documents"))
 
@@ -798,20 +558,6 @@ SELECT doc_id AS media_id,
        CASE WHEN lang = 'en' THEN 'image/png' ELSE 'audio/wav' END AS media_type,
        octet_length(encode(text)) AS n_bytes
 FROM documents
-"""
-
-
-def _mm_frames(spark, sf):
-    media = MM.documents_as_media(_t(spark, sf, "documents"))
-    return MM.frame_sample_plan(media, every_n=10)
-
-
-_MM_FRAMES_SQL = """
-SELECT doc_id AS media_id,
-       CASE WHEN lang = 'en' THEN 'image/png' ELSE 'audio/wav' END AS media_type,
-       CAST(f AS INT) AS frame_idx
-FROM documents,
-     UNNEST(range(0, greatest(CAST(floor(octet_length(encode(text)) / 100) AS INT) - 1, 0) + 1, 10)) AS t(f)
 """
 
 
@@ -935,27 +681,8 @@ def _kg_pagerank(spark, sf):
                     iterations=5)
 
 
-def _kg_two_hop(spark, sf):
-    from smart_pdf_md_spark.operators.graph import two_hop_paths
-    from smart_pdf_md_spark.plans.pipeline import build_triples
-    t = build_triples(spark, _kg_corpus(spark))["triples"]
-    return two_hop_paths(t, "CALLS", "CALLS")
-
-
 def _dedup_minhash(spark, sf):
     return D.minhash_dedup_pairs(_t(spark, sf, "documents"), threshold=0.5)
-
-
-def _dedup_simhash(spark, sf):
-    # hamming ≤ 3 makes the 4×16-bit banding pigeonhole-COMPLETE: every
-    # qualifying pair shares a band, so the operator is exact here (r1's
-    # ≤12 matched 13.7% of all pairs — a near-dup net that loose is noise)
-    return D.simhash_pairs(_t(spark, sf, "documents"), max_hamming=3)
-
-
-def _ann_lsh(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    return SIM.topk_lsh(emb, emb.filter(F.col("vec_id") < 3), k=5)
 
 
 def _j8_range_join(spark, sf):
@@ -1018,18 +745,6 @@ def _ann_ivf(spark, sf):
     # ≥ gates live in tests/test_dedup_similarity.py).
     emb = _t(spark, sf, "embeddings")
     return SIM.topk_ivf(emb, emb.filter(F.col("vec_id") < 3), k=5)
-
-
-def _mm_features(spark, sf):
-    # the driver canonicalizer hashes cell values (pandas Categorical), which
-    # cannot hash Python lists — project the array<double> feature to a
-    # deterministic scalar string (r2 VERDICT item 1)
-    media = MM.documents_as_media(_t(spark, sf, "documents"))
-    feats = MM.extract_features(media)
-    feature_str = F.array_join(
-        F.transform("feature", lambda x: F.format_string("%.6f", x)), ",")
-    return feats.select("media_id", "media_type",
-                        feature_str.alias("feature"))
 
 
 def _repetition_stats(spark, sf):
@@ -1100,17 +815,6 @@ SELECT count(*) AS n_triangles
 FROM e e1 JOIN e e2 ON e2.u = e1.v
           JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
 """
-
-
-def _dedup_clusters_q(spark, sf):
-    # pairs → transitive clusters → deterministic keeper (dedup.py:
-    # dedup_clusters): cluster labels are min-id-derived, so the full
-    # (id, keeper_id, cluster_size, is_keeper) table is deterministic at
-    # any parallelism — rows-only because transitive closure needs a
-    # recursive CTE DuckDB-side (pytest pins exactness on planted graphs).
-    docs = _t(spark, sf, "documents")
-    pairs = D.minhash_dedup_pairs(docs, threshold=0.9)
-    return D.dedup_clusters(pairs, docs)
 
 
 def _curation_chunks(spark, sf):
@@ -1635,6 +1339,9 @@ FROM pair JOIN s USING (src) JOIN d USING (dst) CROSS JOIN t
 """
 
 
+# A row rotated off the board takes its builder and SQL with it; its
+# operator family keeps its pytest coverage. tests/test_entry_reachability.py
+# fails on any builder or _*_SQL constant that nothing reaches.
 _PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q1_pricing_summary": (_q1_pricing, _Q1_SQL),
     "s1_scan_project": (_s1_scan_project, _S1_SQL),
@@ -1672,8 +1379,7 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # mm_frame_sample (multimodal scan path pinned by mm_media_meta) and
     # dedup_simhash (pigeonhole-exactness pinned by
     # test_simhash_banded_exact_at_hamming3) rotate OFF; the three r3
-    # operators the board never swept rotate ON. The retired builders stay
-    # defined above for tests and callers.
+    # operators the board never swept rotate ON.
     "j8_range_join": (_j8_range_join, _J8_SQL),
     "mean_pool": (_mean_pool, _MEAN_POOL_SQL),
     "ann_topk_ivf": (_ann_ivf, None),
@@ -1684,7 +1390,7 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # family as text_quality_score), kg_two_hop_calls OFF (two-hop pinned
     # by the g1 oracle pair; the KG pipeline by kg_entities/
     # kg_canonical_triples/kg_pagerank). The four r4/r5 operators the board
-    # never swept rotate ON; retired builders stay defined for tests.
+    # never swept rotate ON.
     "repetition_stats": (_repetition_stats, _REPETITION_SQL),
     "triangle_count": (_triangle_count, _TRIANGLE_SQL),
     "curation_chunks": (_curation_chunks, None),
@@ -1709,7 +1415,6 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # the clustering machinery). ON: the three round-6 operators whose
     # DuckDB parity SQL already existed in tests — now full oracle rows —
     # plus the PQ and mergeable-sketch paths as rows-only driver rows.
-    # Retired builders stay defined for tests and callers.
     "unigram_logprob": (_unigram_logprob_q, _UNIGRAM_SQL),
     "ngram_novelty": (_ngram_novelty_q, _NOVELTY_SQL),
     "cap_per_group": (_cap_per_group_q, _CAP_SQL),
@@ -1723,7 +1428,6 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # tests), j5_semi_join (the skew family pinned by j5b_salted_agg +
     # operators/skew.py tests). ON: the three round-7 operators whose
     # DuckDB parity SQL already existed in tests — now full oracle rows.
-    # Retired builders stay defined for tests and callers.
     "oov_rate": (_oov_rate_q, _OOV_SQL),
     "span_coverage": (_span_coverage_q, _SPAN_COV_SQL),
     "tfidf_keywords": (_tfidf_keywords_q, _TFIDF_SQL),
@@ -1735,8 +1439,7 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # agg_rollup (grouping-set family pinned by agg_cube, still on
     # board). ON: the three round-8 operators whose DuckDB parity SQL
     # already existed in tests — now full oracle rows. dedup_paragraphs
-    # lands AFTER its exchanges were hash-keyed (ask #1). Retired
-    # builders stay defined above for tests and callers.
+    # lands AFTER its exchanges were hash-keyed (ask #1).
     "dedup_paragraphs": (_dedup_paragraphs_q, _DEDUP_PARA_SQL),
     "bigram_logprob": (_bigram_logprob_q, _BIGRAM_SQL),
     "edge_pmi": (_edge_pmi_q, _EDGE_PMI_SQL),

@@ -87,16 +87,13 @@ def _shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
 # posting, so by pn ≈ 8 the ~25× candidate reduction wins.
 AUTO_PREFIX_P99 = 8
 
-# regime the last ngram_jaccard_pairs(regime="auto") call resolved to —
-# observability for tests and operators ("which plan did my corpus get?")
-LAST_AUTO_REGIME: dict[str, str] = {}
-
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.8,
                         max_posting: int = 1000,
-                        regime: str = "postings") -> DataFrame:
+                        regime: str = "postings",
+                        metrics: dict | None = None) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs; output identical in every regime.
 
     Shared-shingle counting gives |A∩B|; set sizes give the union. Postings
@@ -116,8 +113,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
       corpora where postings run long.
     - ``"auto"``: ONE extra tiny agg (p99 posting length, computed on the
       postings table the cap needs anyway) picks the regime at the
-      measured crossover (:data:`AUTO_PREFIX_P99`); the choice is recorded
-      in :data:`LAST_AUTO_REGIME`."""
+      measured crossover (:data:`AUTO_PREFIX_P99`).
+
+    ``metrics`` receives the regime that ran (``regime``) and, under
+    ``"auto"``, the p99 posting length that chose it (``p99_posting``) —
+    "which plan did my corpus get?"."""
     if regime not in ("postings", "prefix", "auto"):
         raise ValueError(f"unknown regime: {regime!r}")
     # NOTE (r10, measured): carrying per-doc set sizes on every posting row
@@ -142,8 +142,10 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         p99 = postings.agg(
             F.percentile_approx("pn", 0.99).alias("p")).collect()[0][0]
         regime = "prefix" if (p99 or 0) > AUTO_PREFIX_P99 else "postings"
-        LAST_AUTO_REGIME.clear()
-        LAST_AUTO_REGIME.update({"regime": regime, "p99_posting": str(p99)})
+        if metrics is not None:
+            metrics["p99_posting"] = p99
+    if metrics is not None:
+        metrics["regime"] = regime
     shc = sh.join(F.broadcast(postings.filter(F.col("pn") > max_posting)),
                   "shingle", "left_anti")
     if regime == "postings":
@@ -478,12 +480,6 @@ def _sig_bands(sigs: DataFrame) -> DataFrame:
      .select("id", "band", "band_hash")
 
 
-# hot-bucket drop counters of the most recent minhash_pairs_from_signatures
-# run (the linking.py LAST_DROP_METRICS discipline): a corpus where one
-# boilerplate band bucket swallows thousands of docs is observable, never
-# silently quadratic.
-LAST_BAND_DROP_METRICS: dict[str, int] = {}
-
 # band-bucket cap: like linking.MAX_BUCKET but sized for documents — a
 # bucket of b docs contributes b·(b−1)/2 candidate pairs, so an uncapped
 # boilerplate bucket (thousands of near-identical docs hashing every band
@@ -512,9 +508,10 @@ def minhash_pairs_from_signatures(sigs_probe: DataFrame, sigs_all: DataFrame,
     Scale shape (r5 VERDICT what's-wrong #3/#4): band rows are SLIM —
     (id, band, band_hash), not the signature — and band buckets larger
     than ``max_bucket`` on the full side are dropped from BOTH sides with
-    counted, logged drops (`LAST_BAND_DROP_METRICS` / ``metrics``), the
-    linking.py cap discipline. Signatures re-join by id only on the
-    candidate-sized (near-dup-bounded) output for the est rescore; the
+    counted, logged drops (``metrics``), the linking.py cap discipline: a
+    corpus where one boilerplate band bucket swallows thousands of docs is
+    observable, never silently quadratic. Signatures re-join by id only on
+    the candidate-sized (near-dup-bounded) output for the est rescore; the
     result is materialized eagerly (candidate-thresholded, small) so the
     persist() that keeps the signature frames single-computed can be
     released before returning.
@@ -571,8 +568,6 @@ def minhash_pairs_from_signatures(sigs_probe: DataFrame, sigs_all: DataFrame,
             drop_stats = {"dropped_buckets": len(hot_rows),
                           "dropped_band_rows": int(sum(r["bn"]
                                                        for r in hot_rows))}
-            LAST_BAND_DROP_METRICS.clear()
-            LAST_BAND_DROP_METRICS.update(drop_stats)
             if metrics is not None:
                 metrics.update(drop_stats)
             if hot_rows:
@@ -774,13 +769,6 @@ def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-# truncation counter of the most recent duplicate_spans run (the
-# LAST_BAND_DROP_METRICS discipline)
-LAST_SPAN_METRICS: dict[str, int] = {}
-
-
-
-
 def _common_fwd(a: str, b: str, i: int, j: int, chunk: int = 512) -> int:
     """Length of the longest common prefix of a[i:] and b[j:] — chunked
     slice comparison (C-speed) with a char-level tail inside the first
@@ -851,8 +839,8 @@ def duplicate_spans(docs: DataFrame, pairs: DataFrame, min_len: int = 50,
     repeats are ALL reported — span_coverage unions and remove_spans
     excises intervals, so more-complete evidence only improves both.
 
-    Bounds, all COUNTED (LAST_SPAN_METRICS / ``metrics``): texts truncate
-    at ``max_text_chars`` (truncated_pairs); gram hashes occurring more
+    Bounds, all COUNTED (``metrics``): texts truncate at
+    ``max_text_chars`` (truncated_pairs); gram hashes occurring more
     than ``max_gram_occurrences`` times per side pair only their first
     occurrences and a pair emits at most ``max_match_points`` anchor
     matches (dropped_anchor_pairs) — the pathological all-anchors-match
@@ -1001,8 +989,6 @@ def duplicate_spans(docs: DataFrame, pairs: DataFrame, min_len: int = 50,
                          .cast("long")).collect()[0][0])
     stats = {"truncated_pairs": int(n_trunc),
              "dropped_anchor_pairs": int(n_dropped)}
-    LAST_SPAN_METRICS.clear()
-    LAST_SPAN_METRICS.update(stats)
     if metrics is not None:
         metrics.update(stats)
     return res.filter(F.col("length") >= 0).drop("_trunc", "_dropped")

@@ -25,9 +25,10 @@ Fault injection (analogue of SMART_PDF_MD_MARKER_MOCK_FAIL*, core.py:38-44):
   nonce) raises — a transient failure, for pinning that non-'ok' outcomes
   are never memoized.
 
-Scale notes: the stage is embarrassingly parallel per file; the pipeline
-repartitions on ``xxhash64(file_id)`` beforehand so a mega-repo cannot pin
-one task (J5). ``content`` enters this stage and never leaves it — only
+Scale notes: the stage is embarrassingly parallel per file; with
+``build_mentions(partitions=n)`` the pipeline repartitions on
+``xxhash64(file_id)`` beforehand so a mega-repo cannot pin one task (J5).
+``content`` enters this stage and never leaves it — only
 ``content_sha256`` survives (column-pruning discipline, SURVEY.md §4.2).
 """
 
@@ -37,7 +38,6 @@ import hashlib
 import os
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -246,11 +246,10 @@ def extract_mentions(routed: DataFrame,
         #
         # Per-PARTITION extraction memo: identical (content, lang, route)
         # triples — vendored duplicates that happen to colocate in a scan
-        # split — are parsed once. Zero shuffle, composes with either
-        # dedup_content mode (the global variant pays a full content
-        # shuffle and is opt-in; this is the free fraction of that win).
-        # Keyed by computed sha (collision-safe), capped so a pathological
-        # partition of giant distinct files cannot hold every mention list.
+        # split — are parsed once, with zero shuffle (a global dedup would
+        # have to shuffle the raw content). Keyed by computed sha
+        # (collision-safe), capped so a pathological partition of giant
+        # distinct files cannot hold every mention list.
         from types import SimpleNamespace
 
         memo: dict[tuple, tuple] = {}
@@ -320,29 +319,12 @@ def extract_mentions(routed: DataFrame,
 
 def mention_id_col():
     """Stable per-mention join key, JVM-side (kind/name/line are unique per
-    file after dedupe_mentions, so the id is unique per mention row). A pure
-    derivation of columns that exist in every schema version — shared by
-    extract_mentions and the resume-time backfill so the two can't drift."""
+    file after dedupe_mentions, so the id is unique per mention row)."""
     return F.when(
         F.col("kind") != FILE_MARKER,
         F.substring(
             F.sha2(F.concat_ws("\x1f", "file_id", "kind", "name",
                                F.col("line").cast("string")), 256), 1, 16))
-
-
-def ensure_mention_schema(extracted: DataFrame) -> DataFrame:
-    """Backfill a pre-r3 committed mentions stage on read (ADVICE r3):
-    snapshots committed before span/mention_id existed would otherwise make
-    triples_from_mentions raise UNRESOLVED_COLUMN on resume. `mention_id`
-    is recomputed with the exact extract-time expression (pure derivation);
-    `span` cannot be re-derived without content, so it backfills as null —
-    the same value status rows carry. No-op on current-schema frames."""
-    if "span" not in extracted.columns:
-        extracted = extracted.withColumn(
-            "span", F.lit(None).cast("array<int>"))
-    if "mention_id" not in extracted.columns:
-        extracted = extracted.withColumn("mention_id", mention_id_col())
-    return extracted
 
 
 def mentions_only(extracted: DataFrame) -> DataFrame:

@@ -36,7 +36,6 @@ signature UDF and pins us to mllib's LSH parameterization.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -49,9 +48,6 @@ N_BANDS = 16         # bands of r = N_PERM // N_BANDS rows
 MAX_BUCKET = 64      # bucket-size cap for the band self-join
 NGRAM = 3
 DEFAULT_COSINE_THRESHOLD = 0.60
-# hot-bucket drop counters of the most recent candidate_pairs run (see its
-# docstring); populated per call, also available via the `metrics` param
-LAST_DROP_METRICS: dict[str, int] = {}
 
 _MERSENNE = (1 << 61) - 1
 # deterministic permutation params (seeded, process-independent)
@@ -115,9 +111,9 @@ def candidate_pairs(names: DataFrame,
     Hot band buckets (> MAX_BUCKET members — vendored-duplicate pathology)
     are excluded from the self-join, and that exclusion is MATERIALIZED, not
     silent (ADVICE r1): the count of dropped buckets/rows is logged to stderr
-    and recorded in `metrics` (keys `dropped_buckets`, `dropped_band_rows`)
-    and in module-level LAST_DROP_METRICS, so a run where a name loses all
-    its bands to hot buckets is observable and alertable."""
+    and recorded in `metrics` (keys `dropped_buckets`, `dropped_band_rows`),
+    so a run where a name loses all its bands to hot buckets is observable
+    and alertable."""
     r = N_PERM // N_BANDS
     sigs = names.withColumn("sig", _minhash_sig(F.col("name")))
     bands = sigs.select(
@@ -138,8 +134,6 @@ def candidate_pairs(names: DataFrame,
     hot_rows = bucket_sizes.filter(F.col("bn") > MAX_BUCKET).collect()
     drop_stats = {"dropped_buckets": len(hot_rows),
                   "dropped_band_rows": int(sum(r["bn"] for r in hot_rows))}
-    LAST_DROP_METRICS.clear()
-    LAST_DROP_METRICS.update(drop_stats)
     if metrics is not None:
         metrics.update(drop_stats)
     if drop_stats["dropped_buckets"]:
@@ -290,7 +284,8 @@ _EDGE_SCHEMA = "name_a string, name_b string, cos double"
 def link_edges(mentions: DataFrame,
                threshold: float = DEFAULT_COSINE_THRESHOLD,
                names: DataFrame | None = None,
-               local_max_vocab: int = LOCAL_LINK_MAX_VOCAB) -> DataFrame:
+               local_max_vocab: int = LOCAL_LINK_MAX_VOCAB,
+               metrics: dict | None = None) -> DataFrame:
     """mentions → similarity edges over the name vocabulary.
 
     Pass a pre-built ``checkpointed_vocabulary`` when the caller also needs
@@ -303,7 +298,10 @@ def link_edges(mentions: DataFrame,
     vocabulary-sized shuffle jobs whose per-job latency, not data, is the
     cost (measured: ~5s fixed per run at any corpus size). Big vocabularies
     (the 10^12-file regime) take the distributed banding path unchanged.
-    Set ``local_max_vocab=0`` to force distributed."""
+    Set ``local_max_vocab=0`` to force distributed.
+
+    Either path records its hot-bucket drop counters in ``metrics``
+    (see candidate_pairs)."""
     if names is None:
         names = checkpointed_vocabulary(mentions)
     if local_max_vocab:
@@ -311,8 +309,8 @@ def link_edges(mentions: DataFrame,
         if len(head) <= local_max_vocab:
             name_list = [row.name for row in head]
             edges, drop_stats = _link_local(name_list, threshold)
-            LAST_DROP_METRICS.clear()
-            LAST_DROP_METRICS.update(drop_stats)
+            if metrics is not None:
+                metrics.update(drop_stats)
             if drop_stats["dropped_buckets"]:
                 import sys
                 print(f"[linking] dropped {drop_stats['dropped_buckets']} hot "
@@ -324,6 +322,6 @@ def link_edges(mentions: DataFrame,
             return spark.createDataFrame(
                 pd.DataFrame(edges, columns=["name_a", "name_b", "cos"]),
                 schema=_EDGE_SCHEMA)
-    pairs = candidate_pairs(names)
+    pairs = candidate_pairs(names, metrics=metrics)
     weights = ngram_tfidf(names)
     return score_pairs(pairs, weights, threshold)

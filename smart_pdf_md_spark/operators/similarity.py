@@ -390,12 +390,6 @@ def mean_pool(emb: DataFrame, group_col: str, vec_col: str = "embedding",
     return pooled.select(group_col, "n_vecs", arr.alias(vec_col))
 
 
-# drop counters of the most recent semdedup run — the
-# LAST_BAND_DROP_METRICS discipline: an oversized cluster is observable,
-# never silently quadratic.
-LAST_SEMDEDUP_METRICS: dict[str, int] = {}
-
-
 def semdedup(emb: DataFrame, eps: float = 0.05,
              n_lists: int = 16, n_iters: int = 3,
              id_col: str = "vec_id", vec_col: str = "embedding",
@@ -423,7 +417,7 @@ def semdedup(emb: DataFrame, eps: float = 0.05,
     matmul against the cluster's KEPT set only). Clusters beyond
     ``max_cluster`` rows dedupe their first ``max_cluster`` scan-order
     rows and pass the overflow through as keepers, with COUNTED drops
-    (``metrics`` / LAST_SEMDEDUP_METRICS) — at real scale raise
+    (``metrics``) — at real scale raise
     ``n_lists`` so clusters bound, exactly like linking's MAX_BUCKET."""
     from pyspark.sql import types as T
 
@@ -487,8 +481,6 @@ def semdedup(emb: DataFrame, eps: float = 0.05,
     n_over = (res.groupBy("list_id").agg(F.max("overflow").alias("o"))
               .agg(F.coalesce(F.sum("o"), F.lit(0))).collect()[0][0])
     stats = {"overflow_rows": int(n_over)}
-    LAST_SEMDEDUP_METRICS.clear()
-    LAST_SEMDEDUP_METRICS.update(stats)
     if metrics is not None:
         metrics.update(stats)
     if n_over:

@@ -15,7 +15,8 @@ State, all through plans/manifests (same Iceberg-shaped commit layer):
                    (the Iceberg bucket(band_hash) analogue): the history
                    side of each batch's band join is a co-located
                    3-column read — history signatures are never re-banded
-                   (legacy run_dirs backfill it once, transparently).
+                   (a run killed between the first batch's cur_filtered
+                   and cur_bands commits backfills it once on replay).
     cc_labels      near-dup cluster labels via streaming/graph_stats.
                    update_cc_state star compression — transitively exact
                    across batches (a new doc that bridges two old clusters
@@ -227,6 +228,7 @@ def curate_append(
 
     prev_filtered = (read_stage(spark, run_dir, _FILTERED)
                      if stage_committed(run_dir, _FILTERED) else None)
+    batch_ids = pending.select("doc_id").distinct()
 
     # near-dup channel: new sigs vs (history ∪ batch) signatures. The
     # history side of the band join reads the COMMITTED cur_bands stage
@@ -244,15 +246,19 @@ def curate_append(
         .select(F.col("doc_id").alias("id"), "sig"))
     backfill = None
     if prev_filtered is not None and not stage_committed(run_dir, _BANDS):
-        # legacy run_dir (pre-cur_bands): band the committed history ONCE
-        # and store it below — every later batch then reads cur_bands
+        # crash recovery: a run killed between the first batch's
+        # cur_filtered and cur_bands commits left history without bands.
+        # Band it ONCE and store it below — every later batch then reads
+        # cur_bands. This batch's own docs may already sit in that history
+        # (torn commit); bands_batch covers them, so exclude them here
+        # exactly as _history_bands does, or each band row lands twice.
         backfill = minhash_band_table(
-            prev_filtered.filter("sig is not null")
+            prev_filtered.join(F.broadcast(batch_ids), "doc_id", "left_anti")
+            .filter("sig is not null")
             .select(F.col("doc_id").alias("id"), "sig"))
     if stage_committed(run_dir, _BANDS):
         bands_all = bands_batch.unionByName(
-            _history_bands(spark, run_dir,
-                           pending.select("doc_id").distinct()))
+            _history_bands(spark, run_dir, batch_ids))
     elif backfill is not None:
         bands_all = bands_batch.unionByName(backfill)
     else:
@@ -317,7 +323,6 @@ def curate_append(
     # distinct runs per batch; only ids already torn-committed (⊆ batch)
     # reach the anti-join's build side. Rows of other batches cannot match
     # df (df ⊆ batch), so the filter is semantics-preserving.
-    batch_ids = pending.select("doc_id").distinct()
 
     def _append_new(df: DataFrame, stage: str, key_cols: list[str]) -> None:
         if stage_committed(run_dir, stage):

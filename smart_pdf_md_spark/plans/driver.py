@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cc import canonical_triples, entity_table
-from ..operators.extract import ensure_mention_schema, file_status, mentions_only
+from ..operators.extract import file_status, mentions_only
 from ..operators.linking import link_edges
 from .manifests import commit_stage, pending_inputs, run_stage, stage_committed
 from .pipeline import build_mentions, triples_from_mentions
@@ -37,7 +37,6 @@ def run_kg(
     partitions: int | None = None,
     on_stage=None,
     forced_route: str | None = None,
-    dedup_content: bool = False,
     timeout_sec: float | None = None,
 ) -> dict:
     """Full resumable run. Returns stage DataFrames + resume flags.
@@ -46,20 +45,12 @@ def run_kg(
     The edges stage carries the linking hot-bucket drop counters
     (``dropped_buckets``/``dropped_band_rows``) in ``metrics``: a 100 TB
     operator's drop rate must reach the machine-readable log, not just
-    stderr (r3 VERDICT #7).
+    stderr (r3 VERDICT #7). A resumed edges stage never re-linked, so it
+    reports no counters.
     ``forced_route`` is the reference's ``-e/--engine`` (cli.py:105-137):
     force one extractor family; unknown values fail per file with rc 9.
-    ``dedup_content=True`` extracts each distinct content once and fans
-    mention rows back out (see build_mentions; row-identical output,
-    full-schema-tested). Measured three ways at dup-factor 1.11
-    (BENCH/BASELINE.md §dedup-content): statistically a WASH with the direct
-    path on this VM — and the global-dedup plan shuffles the full content
-    byte-stream (dropDuplicates carries `content`), the one shape the direct
-    plan categorically avoids, so direct stays the default. Opt in when the
-    corpus duplication factor is high (heavy forking/vendoring): the
-    extraction saving is ∝ dup factor while the shuffle cost is flat.
-    Colocated duplicates are deduplicated for free either way by the
-    per-partition extraction memo (operators/extract.py)."""
+    Colocated duplicate contents are extracted once by the per-partition
+    extraction memo (operators/extract.py)."""
     resumed: dict[str, bool] = {}
 
     def _note(stage: str, metrics: dict | None = None) -> None:
@@ -74,13 +65,10 @@ def run_kg(
         lambda: build_mentions(spark, repo_files, include, exclude,
                                forced_route=forced_route,
                                partitions=partitions,
-                               dedup_content=dedup_content,
                                timeout_sec=timeout_sec),
         MENTION_KEYS,
     )
     _note("mentions")
-    # pre-r3 snapshots lack span/mention_id — backfill on read (ADVICE r3)
-    extracted = ensure_mention_schema(extracted)
     mentions = mentions_only(extracted)
 
     triples, resumed["triples"] = run_stage(
@@ -88,15 +76,6 @@ def run_kg(
         lambda: triples_from_mentions(mentions), TRIPLE_KEYS,
         deps=["mentions"],
     )
-    if "mention_id" not in triples.columns:
-        # a pre-r3 triples snapshot can't be backfilled (its mention_id is a
-        # min over mention rows the snapshot no longer has) — rebuild it from
-        # the (backfilled) mentions stage
-        triples, resumed["triples"] = run_stage(
-            spark, run_dir, "triples",
-            lambda: triples_from_mentions(mentions), TRIPLE_KEYS,
-            deps=["mentions"], force=True,
-        )
     _note("triples")
     # vocabulary computed at most once per run, shared by edges + entities
     # (each stage reads the committed mentions parquet, so extraction is
@@ -109,16 +88,16 @@ def run_kg(
             _names_cache.append(checkpointed_vocabulary(mentions))
         return _names_cache[0]
 
+    # filled only if linking runs: a resumed stage leaves it empty
+    edge_metrics: dict = {}
     edges, resumed["edges"] = run_stage(
         spark, run_dir, "edges",
-        lambda: link_edges(mentions, link_threshold, names=_names()),
+        lambda: link_edges(mentions, link_threshold, names=_names(),
+                           metrics=edge_metrics),
         ["name_a", "name_b"],
         deps=["mentions"],
     )
-    # drop counters are only meaningful when linking actually ran this
-    # run (a resumed stage never re-linked; stale module state would lie)
-    from ..operators.linking import LAST_DROP_METRICS
-    _note("edges", None if resumed["edges"] else dict(LAST_DROP_METRICS))
+    _note("edges", edge_metrics)
     entities, resumed["entities"] = run_stage(
         spark, run_dir, "entities",
         lambda: entity_table(mentions, edges, names=_names()),

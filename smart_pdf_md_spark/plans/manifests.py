@@ -29,11 +29,9 @@ between data-write and marker-write leaves an orphaned batch dir that no
 reader ever sees — in particular an interrupted incremental APPEND cannot
 poison `pending_inputs` into serving half-committed rows under the old
 run_id (ADVICE r1). Per-partition `digest_xxh64` is an order-insensitive
-digest (bit_xor of per-row xxhash64 over the key columns — named for the
-algorithm it actually uses; pre-r3 snapshots called it `sha256_agg` and
-`read_manifest` renames on read), so two runs of the same input can be
-compared partition-by-partition without sorting — the A4 progress/metrics
-analogue.
+digest (bit_xor of per-row xxhash64 over the key columns), so two runs of
+the same input can be compared partition-by-partition without sorting — the
+A4 progress/metrics analogue.
 
 File-level incremental resume (J4): `pending_inputs` anti-joins the input
 against the file_ids already present in a committed mentions stage, so an
@@ -58,21 +56,21 @@ def _stage_dir(run_dir: str, stage: str) -> str:
 
 
 def _read_marker(run_dir: str, stage: str) -> dict | None:
-    """Resolve the committed snapshot pointer; None if not committed."""
+    """Resolve the committed snapshot pointer; None if not committed.
+    Raises ValueError when the marker is not a JSON object with a run_id."""
     marker = os.path.join(_stage_dir(run_dir, stage), "_COMMITTED")
     if not os.path.exists(marker):
         return None
     with open(marker) as f:
-        raw = f.read().strip()
+        raw = f.read()
     try:
         d = json.loads(raw)
-        if isinstance(d, dict) and "run_id" in d:
-            return d
     except ValueError:
-        pass
-    # legacy plain-run_id marker: the whole data dir is the committed view
-    return {"run_id": raw or None, "batches": None,
-            "manifest": "manifest.parquet"}
+        d = None
+    if not (isinstance(d, dict) and "run_id" in d):
+        raise ValueError(f"malformed commit marker {marker!r}: expected a "
+                         f"JSON object with a run_id")
+    return d
 
 
 def _proc_start(pid: int) -> str | None:
@@ -209,8 +207,6 @@ def stage_run_id(run_dir: str, stage: str) -> str | None:
 
 def _batch_paths(run_dir: str, stage: str, marker: dict) -> list[str]:
     data_dir = os.path.join(_stage_dir(run_dir, stage), "data")
-    if marker.get("batches") is None:  # legacy layout
-        return [data_dir]
     return [os.path.join(data_dir, b) for b in marker["batches"]]
 
 
@@ -270,11 +266,8 @@ def read_manifest(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
     if marker is None:
         raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
                                 f"under {run_dir!r}")
-    m = spark.read.parquet(
+    return spark.read.parquet(
         os.path.join(_stage_dir(run_dir, stage), marker["manifest"]))
-    if "sha256_agg" in m.columns:  # pre-r3 snapshots used a lying name
-        m = m.withColumnRenamed("sha256_agg", "digest_xxh64")
-    return m
 
 
 def commit_stage(
@@ -306,21 +299,10 @@ def commit_stage(
     with _commit_lock(sdir):
         prev = _read_marker(run_dir, stage) if mode == "append" else None
 
-        prev_batches = (prev or {}).get("batches")
-        if prev is not None and prev_batches is None:
-            # Legacy snapshot (plain run_id marker, loose files under data/):
-            # appending with only the new batch in the pointer would silently
-            # drop every previously committed row (ADVICE r2). Migrate first:
-            # hardlink the loose files into an immutable batch dir — the legacy
-            # view stays byte-identical until the pointer swap publishes the new
-            # snapshot, so a kill anywhere in between loses nothing; the loose
-            # originals are GC'd only after the swap.
-            prev_batches = [_migrate_legacy_data(data_dir, prev.get("run_id"))]
-
         batch = f"b_{run_id}"
         df.write.mode("overwrite").parquet(os.path.join(data_dir, batch))
 
-        batches = (prev_batches or []) + [batch]
+        batches = (prev["batches"] if prev else []) + [batch]
         committed = spark.read.parquet(
             *[os.path.join(data_dir, b) for b in batches])
         digest = F.bit_xor(F.xxhash64(*[F.col(c) for c in key_cols]))
@@ -351,56 +333,16 @@ def commit_stage(
         return committed
 
 
-def _migrate_legacy_data(data_dir: str, legacy_run_id: str | None) -> str:
-    """Hardlink (copy if cross-device) every loose entry under data/ into a
-    fresh immutable batch dir and return its name. The loose originals are
-    left in place — the legacy marker keeps resolving to the exact committed
-    view until the new pointer is published; _gc_stage removes them after."""
-    batch = f"b_legacy_{legacy_run_id or uuid.uuid4().hex}"
-    dst_root = os.path.join(data_dir, batch)
-    os.makedirs(dst_root, exist_ok=True)
-    for name in os.listdir(data_dir):
-        if name.startswith("b_"):
-            continue
-        src = os.path.join(data_dir, name)
-        dst = os.path.join(dst_root, name)
-        if os.path.isdir(src):
-            shutil.copytree(src, dst, copy_function=_link_or_copy,
-                            dirs_exist_ok=True)
-        else:
-            _link_or_copy(src, dst)
-    return batch
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    if os.path.exists(dst):
-        return  # idempotent re-migration after a kill mid-link
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
-
-
 def _gc_stage(sdir: str, keep_batches: set[str], keep_manifest: str) -> None:
     """After the pointer swap, drop batch dirs / manifests no snapshot
-    references (orphans of killed commits, superseded overwrites) and any
-    loose legacy files already migrated into a batch dir."""
+    references (orphans of killed commits, superseded overwrites)."""
     data_dir = os.path.join(sdir, "data")
     if os.path.isdir(data_dir):
         for d in os.listdir(data_dir):
-            if d.startswith("b_") and d in keep_batches:
-                continue
-            p = os.path.join(data_dir, d)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
+            if d not in keep_batches:
+                shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
     for f in os.listdir(sdir):
-        if (f.startswith("manifest_") or f == "manifest.parquet") \
-                and f != keep_manifest:
+        if f.startswith("manifest_") and f != keep_manifest:
             shutil.rmtree(os.path.join(sdir, f), ignore_errors=True)
 
 

@@ -6,7 +6,7 @@ The reference's whole execution engine is a sequential for-loop
 DataFrame DAG (SURVEY.md §3.3):
 
     repo_files → identity cols → include/exclude globs → routing
-      → repartition(xxhash64(file_id))        # skew: mega-repo spread (J5)
+      → [partitions=n: repartition(xxhash64(file_id))]  # skew spread (J5)
       → mapInArrow extraction                 # engine layer, Arrow-batched
       → triple materialization (pure Column exprs, codegen'd)
       → [linking + canonicalization, operators/linking.py + cc.py]
@@ -107,27 +107,16 @@ def build_mentions(
     exclude: list[str] | None = None,
     forced_route: str | None = None,
     partitions: int | None = None,
-    repartition: bool = False,
-    dedup_content: bool = False,
     timeout_sec: float | None = None,
 ) -> DataFrame:
     """repo_files → extracted (mentions + status rows, union'd).
-
-    `dedup_content=True` extracts each DISTINCT (content, lang, route) once
-    and fans the mention rows back out to every copy with a join on
-    (content_sha256, lang) — the vendored-duplicate optimization (FIXTURES.md
-    plants byte-identical files across ≥5 repos; real corpora are far worse).
-    Trade-off: saves extraction CPU proportional to the duplication factor,
-    costs one shuffle join of the mention stream — a win whenever extraction
-    is expensive or duplication is high. Output is row-identical to the
-    direct path (tested).
 
     Skew note (J5, deliberate): extraction is a per-file map, and parquet
     scan splits are BYTE-balanced (`spark.sql.files.maxPartitionBytes`)
     regardless of repo skew — a mega-repo cannot pin a task here, so the
     default plan runs extraction scan-side with NO shuffle: `content` never
     crosses the wire at all (at 100 TB that shuffle would dominate the job).
-    `repartition=True` adds a defensive `repartition(xxhash64(file_id))`
+    `partitions=n` adds a defensive `repartition(n, xxhash64(file_id))`
     for non-splittable/skewed source layouts (e.g. one row group per
     mega-repo); hash-of-file-id spreads uniformly no matter how skewed the
     repo distribution is. Key-skew handling for the shuffling stages lives
@@ -138,46 +127,14 @@ def build_mentions(
     df = path_filter(df, include, exclude)
     df = textuality_cols(df)
     df = route_col(df, forced_route)
-    if repartition or partitions:
-        # 3× parallelism: extraction cost varies per file (giant files, AST
-        # vs regex), finer tasks smooth stragglers — the partition-level
-        # analogue of the reference's adaptive slice sizing (core.py:1055-1066)
-        n = partitions or spark.sparkContext.defaultParallelism * 3
-        df = df.repartition(n, F.xxhash64("file_id"))
+    if partitions:
+        # extraction cost varies per file (giant files, AST vs regex), so
+        # finer tasks smooth stragglers — the partition-level analogue of
+        # the reference's adaptive slice sizing (core.py:1055-1066)
+        df = df.repartition(partitions, F.xxhash64("file_id"))
     df = df.select("file_id", "repo", "path", "commit", "lang",
                    "content_sha256", "route", "content")
-    if not dedup_content:
-        return extract_mentions(df, timeout_sec=timeout_sec)
-
-    files = df.select("file_id", "repo", "path", "commit", "lang",
-                      "content_sha256", "route")
-    reps = (
-        df.select("content_sha256", "lang", "route", "content")
-        .dropDuplicates(["content_sha256", "lang", "route"])
-        .withColumn("file_id", F.lit(""))
-        .withColumn("repo", F.lit(""))
-        .withColumn("path", F.lit(""))
-        .withColumn("commit", F.lit(""))
-        .select("file_id", "repo", "path", "commit", "lang",
-                "content_sha256", "route", "content")
-    )
-    # span survives the fan-out (column offsets depend only on content);
-    # mention_id does NOT — it hashes file_id, which is per-copy — so it is
-    # recomputed after the join with the shared extract-time derivation
-    # (r4 fix: the r3 schema additions never reached this path, so
-    # dedup_content output lacked span/mention_id entirely)
-    from ..operators.extract import mention_id_col
-    rep_out = extract_mentions(reps, timeout_sec=timeout_sec).select(
-        "content_sha256", "lang", "sha_match", "route_used", "kind", "name",
-        "qualifier", "line", "enclosing", "span", "status", "rc")
-    # fan back out: every copy of a content gets the representative's rows
-    # (sha_match computed on the representative holds for every copy — the
-    # join key IS the sha equality)
-    return files.join(rep_out, ["content_sha256", "lang"], "inner").select(
-        "file_id", "repo", "path", "commit", "lang", "content_sha256",
-        "sha_match", "route_used", "kind", "name", "qualifier", "line",
-        "enclosing", "span", "status", "rc").withColumn(
-        "mention_id", mention_id_col())
+    return extract_mentions(df, timeout_sec=timeout_sec)
 
 
 def build_triples(

@@ -58,12 +58,6 @@ def main(argv: list[str] | None = None) -> int:
                          "(granularity: one slice or one parse may overrun "
                          "before the check lands; oversized python files "
                          "are size-pre-gated)")
-    ap.add_argument("--dedup-content", action="store_true",
-                    help="extract once per distinct content + fan-out "
-                         "instead of per file — worth it on high-duplication "
-                         "corpora; costs a full content shuffle, so the "
-                         "shuffle-free direct path stays the default "
-                         "(measurements: BENCH/BASELINE.md)")
     ap.add_argument("--mode", choices=("kg", "curate"), default="kg",
                     help="kg (default): triple extraction pipeline; "
                          "curate: staged training-data curation over a "
@@ -249,7 +243,6 @@ def main(argv: list[str] | None = None) -> int:
                         args.exclude, args.link_threshold, args.partitions,
                         on_stage=runlog.stage_hook() if runlog else None,
                         forced_route=args.engine,
-                        dedup_content=args.dedup_content,
                         timeout_sec=args.timeout)
         from .plans.pipeline import run_summary
         s = run_summary(result["status"]).collect()[0]

@@ -18,6 +18,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEM_MB = 32 * 1024
+
+
+def default_driver_mem() -> str:
+    """Half of physical memory, capped at 32g: a heap sized past RAM lets
+    the JVM grow until the host kills it instead of spilling. 32g where the
+    host size is unknown."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(phys // 2 // (1 << 20), MAX_DRIVER_MEM_MB)}m"
+
 
 def build_session(
     app_name: str = "smart_pdf_md_spark",
@@ -65,8 +78,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # local mode = driver-only: give the single JVM real headroom so
-        # cached mentions + shuffle buffers never force GC churn/eviction
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # cached mentions + shuffle buffers never force GC churn/eviction,
+        # but no more than the host can back (default_driver_mem)
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Scan-split sizing: extraction runs scan-side (no shuffle — see
         # plans/pipeline.build_mentions), so scan splits ARE the extraction

@@ -60,7 +60,7 @@ def run_incremental(spark: SparkSession, corpus_dir: str, out_dir: str,
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         rid = f"epoch{epoch_id:06d}"
         prev = _read_marker(out_dir, "mentions")
-        if prev and f"b_{rid}" in (prev.get("batches") or []):
+        if prev and f"b_{rid}" in prev["batches"]:
             return  # replayed epoch already in the committed snapshot
         commit_stage(batch_df, out_dir, "mentions",
                      key_cols=["file_id", "kind", "name", "line"],

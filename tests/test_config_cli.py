@@ -266,3 +266,20 @@ def test_curate_cli_mode(tmp_path):
         base + ["--run-dir", str(tmp_path / "cur2")],
         capture_output=True, text=True, cwd="/root/repo", timeout=120)
     assert r3.returncode == 2
+
+
+def test_default_driver_mem_is_half_of_host_capped(monkeypatch):
+    """The driver heap defaults to half of physical memory, never above
+    32g, so a small host spills instead of being outgrown by its JVM."""
+    from smart_pdf_md_spark import session
+
+    gib = 1 << 30
+
+    def host(n_bytes):
+        return lambda key: {"SC_PAGE_SIZE": 4096,
+                            "SC_PHYS_PAGES": n_bytes // 4096}[key]
+
+    monkeypatch.setattr(session.os, "sysconf", host(15 * gib))
+    assert session.default_driver_mem() == f"{15 * 1024 // 2}m"
+    monkeypatch.setattr(session.os, "sysconf", host(256 * gib))
+    assert session.default_driver_mem() == "32768m"

@@ -64,10 +64,11 @@ def test_incremental_curation_cross_batch_dedup(spark, tmp_path):
 def test_incremental_bands_stage_committed_and_legacy_backfill(spark,
                                                                tmp_path):
     """r6 VERDICT next-round #5: each batch commits its slim
-    (doc_id, band, band_hash) rows to cur_bands, and a LEGACY run_dir
-    (history in cur_filtered but no cur_bands — any pre-r7 run) is
-    backfilled transparently on the next batch: near-dup detection against
-    the old history still works, and the stage then covers history too."""
+    (doc_id, band, band_hash) rows to cur_bands, and a run_dir whose
+    history is in cur_filtered but has no cur_bands (what a crash between
+    those two commits leaves) is backfilled on the next batch: near-dup
+    detection against the old history still works, and the stage then
+    covers history too."""
     import shutil
 
     from smart_pdf_md_spark.plans.manifests import read_stage, stage_committed
@@ -82,7 +83,7 @@ def test_incremental_bands_stage_committed_and_legacy_backfill(spark,
     assert {r.doc_id for r in bands1.select("doc_id").distinct().collect()} \
         == {10, 11}
 
-    # simulate a pre-cur_bands run_dir: drop the stage entirely
+    # history without bands: drop the stage entirely
     shutil.rmtree(str(tmp_path / "inc" / "cur_bands"))
     assert not stage_committed(run_dir, "cur_bands")
 
@@ -163,6 +164,43 @@ def test_incremental_crash_between_kept_and_chunks_heals(spark, tmp_path,
     # and a THIRD delivery is now a complete no-op
     s3 = curate_append(spark, b2, run_dir)
     assert s3["batch_new"] == 0 and s3["total_chunks"] == s2["total_chunks"]
+
+
+@pytest.mark.slow
+def test_torn_first_batch_stores_each_band_once(spark, tmp_path,
+                                                monkeypatch):
+    """A crash after the first batch's cur_filtered commit but before its
+    cur_bands commit: the replay backfills cur_bands from cur_filtered,
+    which already holds this batch's own docs. Each (doc_id, band) must
+    still be stored once — a doubled row makes every later batch's
+    hot-bucket sizing count the doc twice."""
+    from smart_pdf_md_spark.plans import curation_incremental as ci
+    from smart_pdf_md_spark.plans.manifests import read_stage, stage_committed
+
+    run_dir = str(tmp_path / "inc")
+    batch = _docs(spark, [(10, _good("a"), "en"), (11, _good("b"), "en")])
+    real_commit = ci.commit_stage
+
+    def torn(df, rd, stage, *a, **k):
+        if stage == "cur_bands":
+            raise RuntimeError("simulated crash before cur_bands commit")
+        return real_commit(df, rd, stage, *a, **k)
+
+    monkeypatch.setattr(ci, "commit_stage", torn)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        curate_append(spark, batch, run_dir)
+    monkeypatch.setattr(ci, "commit_stage", real_commit)
+    assert stage_committed(run_dir, "cur_filtered")
+    assert not stage_committed(run_dir, "cur_bands")
+
+    s = curate_append(spark, batch, run_dir)
+    assert s["batch_kept"] == 2
+    bands = read_stage(spark, run_dir, "cur_bands")
+    n_rows = bands.count()
+    assert n_rows > 0
+    assert n_rows == bands.select("doc_id", "band").distinct().count()
+    assert {r.doc_id for r in bands.select("doc_id").distinct().collect()} \
+        == {10, 11}
 
 
 @pytest.mark.slow

@@ -218,18 +218,15 @@ def test_embedding_lsh_dedup_recall_vs_exact(spark):
 def test_local_link_path_reports_hot_bucket_drops(spark):
     """The driver-local linking fast path must surface the same hot-bucket
     drop metrics as the distributed path (same 'ab'*k one-bucket fixture)."""
-    from smart_pdf_md_spark.operators.linking import (
-        LAST_DROP_METRICS,
-        N_BANDS,
-        link_edges,
-    )
+    from smart_pdf_md_spark.operators.linking import N_BANDS, link_edges
 
     hot = [("ab" * k, "def") for k in range(2, 102)]
     mentions = spark.createDataFrame(hot, ["name", "kind"])
-    edges = link_edges(mentions)  # 100 names → local path
+    metrics: dict = {}
+    edges = link_edges(mentions, metrics=metrics)  # 100 names → local path
     assert edges.count() == 0
-    assert LAST_DROP_METRICS == {"dropped_buckets": N_BANDS,
-                                 "dropped_band_rows": N_BANDS * len(hot)}
+    assert metrics == {"dropped_buckets": N_BANDS,
+                       "dropped_band_rows": N_BANDS * len(hot)}
 
 
 def test_embedding_cosine_cartesian_guard(spark):
@@ -279,7 +276,11 @@ def test_minhash_lsh_dedup_recall_vs_exact_jaccard(spark):
 
     exact = {(r.id_a, r.id_b)
              for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.7).collect()}
-    rows_lsh = D.minhash_dedup_pairs(docs, threshold=0.7).collect()
+    # minhash_dedup_pairs spelled out, to read its drop counters
+    sigs = D.minhash_doc_signatures(docs)
+    band_metrics: dict = {}
+    rows_lsh = D.minhash_pairs_from_signatures(
+        sigs, sigs, 0.7, self_join=True, metrics=band_metrics).collect()
     lsh = {(r.id_a, r.id_b) for r in rows_lsh}
     assert len(exact) >= 30  # the clusters really are near-dups
     recall = len(lsh & exact) / len(exact)
@@ -299,8 +300,7 @@ def test_minhash_lsh_dedup_recall_vs_exact_jaccard(spark):
     got = sorted((r.id_a, r.id_b, r.est_jaccard) for r in rows_lsh)
     assert got == pinned
     # no bucket on this fixture approaches the cap — nothing was dropped
-    assert D.LAST_BAND_DROP_METRICS == {"dropped_buckets": 0,
-                                        "dropped_band_rows": 0}
+    assert band_metrics == {"dropped_buckets": 0, "dropped_band_rows": 0}
 
 
 def test_minhash_hot_bucket_cap_bounds_boilerplate(spark):
@@ -855,9 +855,10 @@ def test_ngram_jaccard_auto_regime_selection(spark):
 
     for rows, expected in ((heavy, "prefix"), (thin, "postings")):
         df = spark.createDataFrame(rows, ["doc_id", "text"])
+        metrics: dict = {}
         got_auto = sorted(map(tuple, D.ngram_jaccard_pairs(
-            df, threshold=0.5, regime="auto").collect()))
-        assert D.LAST_AUTO_REGIME["regime"] == expected, D.LAST_AUTO_REGIME
+            df, threshold=0.5, regime="auto", metrics=metrics).collect()))
+        assert metrics["regime"] == expected, metrics
         got_post = sorted(map(tuple, D.ngram_jaccard_pairs(
             df, threshold=0.5, regime="postings").collect()))
         got_pref = sorted(map(tuple, D.ngram_jaccard_pairs_prefix(
@@ -1084,12 +1085,13 @@ def test_semdedup_keeper_semantics_and_invariance(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     cents = np.array([[1.0, 0, 0, 0], [0.0, 1, 0, 0]])
 
+    metrics: dict = {}
     out = {r.id: r for r in S.semdedup(emb, eps=0.05, centroids=cents,
-                                       dim=4).collect()}
+                                       dim=4, metrics=metrics).collect()}
     assert {i for i, r in out.items() if r.is_keeper} == {2, 3, 5}
     assert out[1].keeper_id == 2 and out[1].sim_to_keeper == 1.0
     assert out[4].keeper_id == 5
-    assert S.LAST_SEMDEDUP_METRICS == {"overflow_rows": 0}
+    assert metrics == {"overflow_rows": 0}
 
     # looser eps absorbs the cos-0.8 member too
     out_loose = {r.id: r for r in S.semdedup(emb, eps=0.5, centroids=cents,

@@ -201,58 +201,6 @@ def test_kill9_mid_run_resumes_from_last_commit(tmp_path):
     assert stage_committed(rd, "triples_canonical")
 
 
-def _make_legacy_snapshot(spark, run_dir: str, stage: str, rows) -> None:
-    """Hand-build a pre-r2 snapshot: loose parquet directly under data/,
-    a plain-text run_id marker, and a manifest.parquet with the old
-    `sha256_agg` column name."""
-    sdir = os.path.join(run_dir, stage)
-    df = spark.createDataFrame(rows, ["file_id", "val"])
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(sdir, "data"))
-    spark.createDataFrame(
-        [(stage, 0, len(rows), "0" * 16, "legacyrun")],
-        ["stage", "partition_id", "row_count", "sha256_agg", "run_id"],
-    ).write.mode("overwrite").parquet(os.path.join(sdir, "manifest.parquet"))
-    with open(os.path.join(sdir, "_COMMITTED"), "w") as f:
-        f.write("legacyrun")
-
-
-@pytest.mark.slow
-def test_append_over_legacy_snapshot_keeps_all_rows(spark, run_dir):
-    """ADVICE r2 (medium): mode='append' over a legacy-format snapshot must
-    NOT truncate to the new batch — the 10 legacy rows survive the append of
-    5, the legacy loose files are migrated into a batch dir, and the old
-    manifest column name is shimmed on read."""
-    from smart_pdf_md_spark.plans.manifests import commit_stage, stage_run_id
-
-    stage = "mentions"
-    _make_legacy_snapshot(spark, run_dir, stage,
-                          [(f"f{i}", i) for i in range(10)])
-    assert stage_run_id(run_dir, stage) == "legacyrun"
-    assert read_stage(spark, run_dir, stage).count() == 10
-    # legacy manifest read-shim: old column name surfaces as digest_xxh64
-    assert "digest_xxh64" in read_manifest(spark, run_dir, stage).columns
-
-    new = spark.createDataFrame([(f"g{i}", i) for i in range(5)],
-                                ["file_id", "val"])
-    committed = commit_stage(new, run_dir, stage, key_cols=["file_id"],
-                             mode="append")
-    assert committed.count() == 15  # was 5 before the migration fix
-    got = {r.file_id for r in read_stage(spark, run_dir, stage).collect()}
-    assert got == {f"f{i}" for i in range(10)} | {f"g{i}" for i in range(5)}
-    m = read_manifest(spark, run_dir, stage).toPandas()
-    assert "digest_xxh64" in m.columns and "sha256_agg" not in m.columns
-    assert m["row_count"].sum() == 15
-
-    # loose legacy files were GC'd after the pointer swap; batches remain
-    data_dir = os.path.join(run_dir, stage, "data")
-    assert all(d.startswith("b_") for d in os.listdir(data_dir))
-
-    # appending again over the (now new-format) snapshot keeps accumulating
-    commit_stage(spark.createDataFrame([("h0", 0)], ["file_id", "val"]),
-                 run_dir, stage, key_cols=["file_id"], mode="append")
-    assert read_stage(spark, run_dir, stage).count() == 16
-
-
 def test_concurrent_appends_lose_nothing(spark, run_dir):
     """Two writers appending to the same stage concurrently: without the
     per-stage commit lock both read the same prior snapshot and the second
@@ -373,38 +321,18 @@ def test_lock_published_atomically_with_payload(run_dir):
     assert not os.path.exists(path)
 
 
-@pytest.mark.slow
-def test_pre_r3_run_dir_resumes_with_backfill(spark, corpus_sdf, run_dir):
-    """A run_dir whose mentions/triples stages were committed BEFORE span +
-    mention_id existed must resume, not raise UNRESOLVED_COLUMN (ADVICE r3):
-    mentions backfill on read (mention_id is a pure re-derivation, span →
-    null); the triples stage (whose mention_id was an aggregate the snapshot
-    no longer carries) force-rebuilds from the backfilled mentions."""
-    from smart_pdf_md_spark.plans.driver import MENTION_KEYS, TRIPLE_KEYS
-    from smart_pdf_md_spark.plans.manifests import commit_stage
-    from smart_pdf_md_spark.plans.pipeline import (
-        build_mentions,
-        triples_from_mentions,
-    )
-    from smart_pdf_md_spark.operators.extract import mentions_only
-
-    extracted = build_mentions(spark, corpus_sdf)
-    legacy = extracted.drop("span", "mention_id")
-    commit_stage(legacy, run_dir, "mentions", MENTION_KEYS)
-    legacy_triples = triples_from_mentions(
-        mentions_only(extracted)).drop("mention_id")
-    commit_stage(legacy_triples, run_dir, "triples", TRIPLE_KEYS,
-                 deps=["mentions"])
-
-    res = run_kg(spark, corpus_sdf, run_dir)
-    assert res["resumed"]["mentions"] is True  # legacy snapshot reused as-is
-    assert res["resumed"]["triples"] is False  # old schema → forced rebuild
-    assert "mention_id" in res["triples"].columns
-    assert "span" in res["mentions"].columns
-    # the backfilled ids equal the extract-time derivation bit-for-bit
-    fresh = triples_from_mentions(mentions_only(extracted))
-    assert sorted(map(tuple, res["triples"].collect())) == \
-        sorted(map(tuple, fresh.collect()))
+def test_malformed_commit_marker_raises(run_dir):
+    """A `_COMMITTED` marker that is not a JSON object with a run_id (a
+    plain run_id string, a JSON list, an empty file) is refused with a
+    ValueError naming the file, never read as some other snapshot."""
+    sdir = os.path.join(run_dir, "mentions")
+    os.makedirs(sdir)
+    marker = os.path.join(sdir, "_COMMITTED")
+    for raw in ("somerunid", '["b_x"]', '{"batches": []}', ""):
+        with open(marker, "w") as f:
+            f.write(raw)
+        with pytest.raises(ValueError, match="_COMMITTED"):
+            stage_committed(run_dir, "mentions")
 
 
 @pytest.mark.slow

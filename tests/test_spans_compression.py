@@ -34,9 +34,10 @@ def test_duplicate_spans_finds_planted_span_with_offsets(spark):
         ["doc_id", "text"])
     pairs = spark.createDataFrame([(1, 2), (3, 4)], ["id_a", "id_b"])
 
-    spans = D.duplicate_spans(docs, pairs, min_len=50).collect()
-    assert D.LAST_SPAN_METRICS == {"truncated_pairs": 0,
-                                   "dropped_anchor_pairs": 0}
+    metrics: dict = {}
+    spans = D.duplicate_spans(docs, pairs, min_len=50,
+                              metrics=metrics).collect()
+    assert metrics == {"truncated_pairs": 0, "dropped_anchor_pairs": 0}
     # pair (3,4): 12-char overlap < min_len → nothing
     assert all((r.id_a, r.id_b) != (3, 4) for r in spans)
     # pair (1,2): exactly the planted block, at its true offsets (the
