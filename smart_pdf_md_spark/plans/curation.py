@@ -11,7 +11,7 @@ ships and committed through the same manifest/resume protocol:
 
 Every stage is a lazy DataFrame plan committed via plans/manifests.py, so a
 killed curation run resumes from the last committed stage exactly like the
-KG pipeline, and the per-stage manifests give row-count + digest accounting
+KG pipeline, and the per-stage commit markers give row-count + digest accounting
 for free. All scoring/filtering is scan-side Column exprs; the only
 shuffles are the dedup pair generation (banded) and the cluster CC — both
 bounded, never all-pairs (operators/dedup.py docstrings).

@@ -12,11 +12,11 @@ manifest table partitioned by run. The sandbox has no Iceberg jar
 file, behind one small interface:
 
     run_dir/<stage>/data/b_<run_id>/      one immutable batch dir per commit
-    run_dir/<stage>/manifest_<run_id>.parquet  (stage, partition_id,
-                                           row_count, digest_xxh64, run_id)
     run_dir/<stage>/_COMMITTED            JSON snapshot pointer, published
                                           LAST via temp-file + os.replace:
-                                          {"run_id", "batches", "manifest"}
+                                          {"run_id", "batches", "stats":
+                                          {batch: {"rows", "digest_xxh64"}},
+                                          "schema"}
     run_dir/<stage>/_COMMIT_LOCK          per-stage writer lock (hardlink-
                                           published {pid, token, start}
                                           file; dead holders stolen) — the
@@ -28,10 +28,18 @@ resolve the marker and read ONLY the batch dirs it lists. A run killed
 between data-write and marker-write leaves an orphaned batch dir that no
 reader ever sees — in particular an interrupted incremental APPEND cannot
 poison `pending_inputs` into serving half-committed rows under the old
-run_id (ADVICE r1). Per-partition `digest_xxh64` is an order-insensitive
-digest (bit_xor of per-row xxhash64 over the key columns), so two runs of
-the same input can be compared partition-by-partition without sorting — the
-A4 progress/metrics analogue.
+run_id (ADVICE r1).
+
+The marker is the whole manifest. Each batch's `rows` and `digest_xxh64`
+(bit_xor of per-row xxhash64 over the key columns: order-insensitive, so
+two runs of the same input compare without sorting — the A4
+progress/metrics analogue) are observed on the batch's own write job, and
+an append carries the earlier batches' stats forward, so a commit is one
+Spark job and never re-reads history. `schema` is the written schema with
+every field nullable (what a parquet read returns); readers pass it to
+`spark.read.schema`, so no footer-inference job fires, and every metadata
+reader (`stage_global_digest`, `verify_stage_digests`, `run_report`) is a
+JSON read.
 
 File-level incremental resume (J4): `pending_inputs` anti-joins the input
 against the file_ids already present in a committed mentions stage, so an
@@ -41,14 +49,18 @@ interrupted extraction pass reprocesses only uncommitted files.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import json
 import os
 import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+_U64 = (1 << 64) - 1
 
 
 def _stage_dir(run_dir: str, stage: str) -> str:
@@ -57,7 +69,8 @@ def _stage_dir(run_dir: str, stage: str) -> str:
 
 def _read_marker(run_dir: str, stage: str) -> dict | None:
     """Resolve the committed snapshot pointer; None if not committed.
-    Raises ValueError when the marker is not a JSON object with a run_id."""
+    Raises ValueError when the marker is not a JSON object with a run_id,
+    its batches, their stats and the schema."""
     marker = os.path.join(_stage_dir(run_dir, stage), "_COMMITTED")
     if not os.path.exists(marker):
         return None
@@ -67,9 +80,14 @@ def _read_marker(run_dir: str, stage: str) -> dict | None:
         d = json.loads(raw)
     except ValueError:
         d = None
-    if not (isinstance(d, dict) and "run_id" in d):
+    if not (isinstance(d, dict) and "run_id" in d
+            and isinstance(d.get("batches"), list)
+            and isinstance(d.get("stats"), dict)
+            and isinstance(d.get("schema"), dict)
+            and all(b in d["stats"] for b in d["batches"])):
         raise ValueError(f"malformed commit marker {marker!r}: expected a "
-                         f"JSON object with a run_id")
+                         f"JSON object with a run_id, batches, per-batch "
+                         f"stats and a schema")
     return d
 
 
@@ -205,11 +223,6 @@ def stage_run_id(run_dir: str, stage: str) -> str | None:
     return m["run_id"] if m else None
 
 
-def _batch_paths(run_dir: str, stage: str, marker: dict) -> list[str]:
-    data_dir = os.path.join(_stage_dir(run_dir, stage), "data")
-    return [os.path.join(data_dir, b) for b in marker["batches"]]
-
-
 def _deps_path(run_dir: str, stage: str) -> str:
     return os.path.join(_stage_dir(run_dir, stage), "_DEPS.json")
 
@@ -222,8 +235,7 @@ def params_hash(params: dict | None) -> str | None:
     under the old knobs (ADVICE r4)."""
     if params is None:
         return None
-    import hashlib as _hashlib
-    return _hashlib.sha256(
+    return hashlib.sha256(
         json.dumps(params, sort_keys=True, default=str).encode()).hexdigest()
 
 
@@ -239,35 +251,52 @@ def stage_fresh(run_dir: str, stage: str, deps: list[str] | None,
     ph = params_hash(params)
     if not deps and ph is None:
         return True
-    import json as _json
     dp = _deps_path(run_dir, stage)
     if not os.path.exists(dp):
         return False  # legacy commit without dep records → be safe, recompute
     with open(dp) as f:
-        recorded = _json.load(f)
+        recorded = json.load(f)
     if ph is not None and recorded.get("__params__") != ph:
         return False
     return all(recorded.get(d) == stage_run_id(run_dir, d)
                for d in (deps or []))
 
 
+def _committed_marker(run_dir: str, stage: str) -> dict:
+    marker = _read_marker(run_dir, stage)
+    if marker is None:
+        raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
+                                f"under {run_dir!r}")
+    return marker
+
+
+def _read_batches(spark: SparkSession, run_dir: str, stage: str,
+                  marker: dict) -> DataFrame:
+    data_dir = os.path.join(_stage_dir(run_dir, stage), "data")
+    return spark.read.schema(T.StructType.fromJson(marker["schema"])) \
+        .parquet(*[os.path.join(data_dir, b) for b in marker["batches"]])
+
+
 def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
     """Committed snapshot only: reads the batch dirs the marker lists, so
-    orphaned batches from a killed commit are invisible."""
-    marker = _read_marker(run_dir, stage)
-    if marker is None:
-        raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
-                                f"under {run_dir!r}")
-    return spark.read.parquet(*_batch_paths(run_dir, stage, marker))
+    orphaned batches from a killed commit are invisible. The marker's
+    schema is passed to the reader, so no inference job fires."""
+    return _read_batches(spark, run_dir, stage,
+                         _committed_marker(run_dir, stage))
 
 
-def read_manifest(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
-    marker = _read_marker(run_dir, stage)
-    if marker is None:
-        raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
-                                f"under {run_dir!r}")
-    return spark.read.parquet(
-        os.path.join(_stage_dir(run_dir, stage), marker["manifest"]))
+def _nullable(dt: T.DataType) -> T.DataType:
+    """`dt` with every field, array element and map value nullable — the
+    schema a parquet read returns for data written as `dt`."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def commit_stage(
@@ -280,70 +309,79 @@ def commit_stage(
     deps: list[str] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Write a fresh immutable batch dir + per-snapshot manifest, then
-    atomically publish the snapshot pointer. `mode='append'` keeps the prior
-    snapshot's batches in the new pointer; a kill anywhere before the pointer
-    swap leaves the previous snapshot fully intact and the new batch
-    invisible (no torn append — ADVICE r1).
+    """Write a fresh immutable batch dir, then atomically publish the
+    snapshot pointer with the batch's (rows, digest) — observed on the
+    write job itself, so the commit is exactly one Spark job. A kill
+    anywhere before the pointer swap leaves the previous snapshot fully
+    intact and the new batch invisible (no torn append — ADVICE r1).
 
-    Returns the stage re-read from the committed snapshot (so downstream
+    `mode='append'` keeps the prior snapshot's batches and their stats in
+    the new pointer (O(batch): history is never re-read). The batch's
+    column names and types must match the snapshot's (nullability aside),
+    or ValueError is raised before anything is written.
+
+    Bound: each append adds one batch dir and nothing compacts them, so a
+    stage committed N times is read as N paths. Up to
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` (default 32)
+    the driver lists them and a read fires no job; from 33 paths on, every
+    read of the stage (this function's return value included) fires one
+    parallel-listing job (measured: 0 jobs at 32 batches, 1 at 33 and 40).
+
+    Returns the stage read back from the committed snapshot (so downstream
     stages read disk, not the live plan — lineage cut, like the CC
-    checkpoints)."""
+    checkpoints); building that frame fires no job."""
     sdir = _stage_dir(run_dir, stage)
     data_dir = os.path.join(sdir, "data")
-    spark = df.sparkSession
     run_id = run_id or uuid.uuid4().hex
+    schema = _nullable(df.schema)
     # the whole commit — snapshot read, data write, pointer swap, GC —
     # runs under the per-stage lock so concurrent writers serialize and
     # GC can never collect another writer's in-flight batch
     with _commit_lock(sdir):
         prev = _read_marker(run_dir, stage) if mode == "append" else None
+        if prev is not None:
+            snap = T.StructType.fromJson(prev["schema"])
+            if ({f.name: f.dataType for f in schema.fields}
+                    != {f.name: f.dataType for f in snap.fields}):
+                raise ValueError(
+                    f"append to stage {stage!r} under {run_dir!r}: batch "
+                    f"schema {schema.simpleString()} does not match the "
+                    f"snapshot's {snap.simpleString()}")
 
         batch = f"b_{run_id}"
-        df.write.mode("overwrite").parquet(os.path.join(data_dir, batch))
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                   F.coalesce(F.bit_xor(F.xxhash64(*key_cols)), F.lit(0))
+                   .alias("digest")) \
+            .write.mode("overwrite").parquet(os.path.join(data_dir, batch))
+        got = obs.get
 
         batches = (prev["batches"] if prev else []) + [batch]
-        committed = spark.read.parquet(
-            *[os.path.join(data_dir, b) for b in batches])
-        digest = F.bit_xor(F.xxhash64(*[F.col(c) for c in key_cols]))
-        manifest = (
-            committed.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.format_string("%016x", digest).alias("digest_xxh64"),
-            )
-            .withColumn("stage", F.lit(stage))
-            .withColumn("run_id", F.lit(run_id))
-            .select("stage", "partition_id", "row_count", "digest_xxh64", "run_id")
-        )
-        manifest_name = f"manifest_{run_id}.parquet"
-        manifest.write.mode("overwrite").parquet(os.path.join(sdir, manifest_name))
-
+        stats = {**(prev["stats"] if prev else {}),
+                 batch: {"rows": got["rows"],
+                         "digest_xxh64": f"{got['digest'] & _U64:016x}"}}
         ph = params_hash(params)
         if deps or ph is not None:
             record = {d: stage_run_id(run_dir, d) for d in (deps or [])}
             if ph is not None:
                 record["__params__"] = ph
             _write_atomic(_deps_path(run_dir, stage), json.dumps(record))
-        _write_atomic(os.path.join(sdir, "_COMMITTED"),
-                      json.dumps({"run_id": run_id, "batches": batches,
-                                  "manifest": manifest_name}))
-        _gc_stage(sdir, keep_batches=set(batches), keep_manifest=manifest_name)
-        return committed
+        marker = {"run_id": run_id, "batches": batches, "stats": stats,
+                  "schema": (prev["schema"] if prev
+                             else json.loads(schema.json()))}
+        _write_atomic(os.path.join(sdir, "_COMMITTED"), json.dumps(marker))
+        _gc_stage(sdir, keep_batches=set(batches))
+        return _read_batches(df.sparkSession, run_dir, stage, marker)
 
 
-def _gc_stage(sdir: str, keep_batches: set[str], keep_manifest: str) -> None:
-    """After the pointer swap, drop batch dirs / manifests no snapshot
-    references (orphans of killed commits, superseded overwrites)."""
+def _gc_stage(sdir: str, keep_batches: set[str]) -> None:
+    """After the pointer swap, drop batch dirs no snapshot references
+    (orphans of killed commits, superseded overwrites)."""
     data_dir = os.path.join(sdir, "data")
     if os.path.isdir(data_dir):
         for d in os.listdir(data_dir):
             if d not in keep_batches:
                 shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
-    for f in os.listdir(sdir):
-        if f.startswith("manifest_") and f != keep_manifest:
-            shutil.rmtree(os.path.join(sdir, f), ignore_errors=True)
 
 
 def run_stage(
@@ -377,20 +415,18 @@ def pending_inputs(inputs_with_id: DataFrame, spark: SparkSession,
 
 def stage_global_digest(spark: SparkSession, run_dir: str,
                         stage: str) -> tuple[int, int]:
-    """(total_rows, global_digest) for a committed stage, folded from its
-    manifest. Per-partition digests are bit_xor over per-row xxhash64 of
-    the key columns; XOR is associative/commutative, so XOR-ing the
-    partition digests yields a PARTITIONING-INVARIANT whole-stage digest —
-    two runs of the same input at any parallelism produce the same value.
-    The manifest is partition-count-sized, so the driver-side fold is
-    bounded."""
-    m = read_manifest(spark, run_dir, stage) \
-        .select("row_count", "digest_xxh64").collect()
-    digest = 0
-    rows = 0
-    for r in m:
-        rows += r.row_count
-        digest ^= int(r.digest_xxh64, 16)
+    """(total_rows, global_digest) for a committed stage, folded from the
+    marker's per-batch stats. Batch digests are bit_xor over per-row
+    xxhash64 of the key columns; XOR is associative/commutative, so their
+    fold is a PARTITIONING-INVARIANT whole-stage digest — two runs of the
+    same input at any parallelism, or split into different batches,
+    produce the same value. A JSON read: `spark` is not used."""
+    marker = _committed_marker(run_dir, stage)
+    rows = digest = 0
+    for b in marker["batches"]:
+        st = marker["stats"][b]
+        rows += st["rows"]
+        digest ^= int(st["digest_xxh64"], 16)
     return rows, digest
 
 
@@ -400,8 +436,8 @@ def verify_stage_digests(spark: SparkSession, run_dir_a: str, run_dir_b: str,
     actionable): for each stage, compare row counts and partitioning-
     invariant global digests between two run dirs — the check a 100 TB
     operator runs after a migration, a Spark upgrade, or a cluster resize
-    to prove the output is row-identical without shuffling a single data
-    row (manifests only)."""
+    to prove the output is row-identical without reading a single data
+    row (commit markers only)."""
     out: dict[str, dict] = {}
     for st in stages:
         ra, da = stage_global_digest(spark, run_dir_a, st)
@@ -413,16 +449,15 @@ def verify_stage_digests(spark: SparkSession, run_dir_a: str, run_dir_b: str,
 
 
 def run_report(spark: SparkSession, run_dir: str) -> DataFrame:
-    """→ (stage, run_id, n_rows, n_partitions) — one row per COMMITTED
-    stage under ``run_dir``, read entirely from the manifest layer (no
-    data files touched): the audit view a pipeline operator queries to
-    answer "what has this run_dir committed, how big is each stage, and
-    under which run_id" — for curation runs this is the per-stage drop
-    accounting without recomputing any count. Stages are discovered from
-    the directory (anything with a _COMMITTED marker), so KG and curation
-    run_dirs both report; uncommitted/foreign subdirectories are skipped.
-    Driver-side work is one tiny manifest read per stage (manifests are
-    per-partition row-count tables, KB-sized by construction)."""
+    """→ (stage, run_id, n_rows, n_batches) — one row per COMMITTED stage
+    under ``run_dir``, read entirely from the commit markers (no data
+    files touched, no Spark job): the audit view a pipeline operator
+    queries to answer "what has this run_dir committed, how big is each
+    stage, and under which run_id" — for curation runs this is the
+    per-stage drop accounting without recomputing any count. Stages are
+    discovered from the directory (anything with a _COMMITTED marker), so
+    KG and curation run_dirs both report; uncommitted/foreign
+    subdirectories are skipped."""
     rows = []
     for name in sorted(os.listdir(run_dir)):
         if not os.path.isdir(_stage_dir(run_dir, name)):
@@ -430,9 +465,7 @@ def run_report(spark: SparkSession, run_dir: str) -> DataFrame:
         marker = _read_marker(run_dir, name)
         if marker is None:
             continue
-        m = read_manifest(spark, run_dir, name) \
-            .agg(F.coalesce(F.sum("row_count"), F.lit(0)).alias("r"),
-                 F.count("*").alias("p")).collect()[0]
-        rows.append((name, marker.get("run_id"), int(m["r"]), int(m["p"])))
+        n_rows = sum(marker["stats"][b]["rows"] for b in marker["batches"])
+        rows.append((name, marker["run_id"], n_rows, len(marker["batches"])))
     return spark.createDataFrame(
-        rows, "stage string, run_id string, n_rows long, n_partitions long")
+        rows, "stage string, run_id string, n_rows long, n_batches long")

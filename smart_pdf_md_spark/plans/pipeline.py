@@ -62,8 +62,9 @@ def triples_from_mentions(mentions: DataFrame, distinct: bool = True) -> DataFra
     # lines): group on the fact key and keep the MIN mention_id as lineage —
     # same shuffle as distinct, parallelism-invariant, and a consumer can
     # still join back to the originating mention row (span/line highlight).
-    # Callers that feed canonical_triples (which ends in its own distinct)
-    # pass distinct=False to save a full-data shuffle.
+    # run_kg keeps this dedup, so its committed `triples` stage is distinct
+    # on the fact key; distinct=False skips the shuffle for a caller whose
+    # consumer dedups anyway (the benchmark scripts feeding canonical_triples).
     if not distinct:
         return out
     keys = ["subj", "pred", "obj", "file_id", "repo", "content_sha256", "conf"]

@@ -8,7 +8,7 @@ Reference analogues:
   evaluated JVM-side so Catalyst can push them toward the scan.
 - Iceberg is the target table format at 10^12-file scale (partition pruning,
   snapshot commits); the sandbox has no Iceberg jar, so the writer falls back
-  to parquet + a manifest directory (same interface — see plans/manifests.py).
+  to parquet + a JSON commit marker (same interface — see plans/manifests.py).
 """
 
 from __future__ import annotations

@@ -43,14 +43,16 @@ def run_incremental(spark: SparkSession, corpus_dir: str, out_dir: str,
 
     Each micro-batch commits through the SAME snapshot protocol as batch
     runs (plans/manifests.commit_stage, mode='append'): the streamed
-    mentions stage is readable via read_stage, carries per-partition
-    digests, and a batch-mode run can resume on top of it. Exactly-once is
-    two-layered — the streaming checkpoint stops a source file from being
-    re-extracted across restarts, and the epoch-keyed batch id makes a
-    REPLAYED foreachBatch (crash between sink write and checkpoint commit)
-    idempotent: a replay overwrites its own immutable b_epochN dir instead
-    of appending a duplicate. Each epoch's manifest recomputes over the
-    whole committed snapshot (append-mode cost) — size micro-batches
+    mentions stage is readable via read_stage, carries per-batch row
+    counts and digests, and a batch-mode run can resume on top of it.
+    Exactly-once is two-layered — the streaming checkpoint stops a source
+    file from being re-extracted across restarts, and the epoch-keyed
+    batch id makes a REPLAYED foreachBatch (crash between sink write and
+    checkpoint commit) idempotent: a replay overwrites its own immutable
+    b_epochN dir instead of appending a duplicate. An epoch's commit costs O(micro-batch): its
+    stats come from its own write job and the earlier epochs' stats carry
+    forward in the marker. Each epoch adds one batch dir, which every
+    later read opens (commit_stage states the bound) — size micro-batches
     accordingly via maxFilesPerTrigger.
     """
     from ..plans.manifests import _read_marker, commit_stage

@@ -9,9 +9,9 @@ import pytest
 
 from smart_pdf_md_spark.plans.driver import extract_incremental, run_kg
 from smart_pdf_md_spark.plans.manifests import (
-    read_manifest,
     read_stage,
     stage_committed,
+    stage_global_digest,
 )
 
 
@@ -35,9 +35,8 @@ def test_full_run_commits_all_stages(spark, corpus_sdf, run_dir):
     res = run_kg(spark, corpus_sdf, run_dir)
     for stage in ("mentions", "triples", "edges", "entities", "triples_canonical"):
         assert stage_committed(run_dir, stage), stage
-        m = read_manifest(spark, run_dir, stage).toPandas()
-        assert m["row_count"].sum() == read_stage(spark, run_dir, stage).count()
-        assert (m["stage"] == stage).all()
+        rows, _ = stage_global_digest(spark, run_dir, stage)
+        assert rows == read_stage(spark, run_dir, stage).count()
     assert not any(res["resumed"].values())
 
 
@@ -322,13 +321,15 @@ def test_lock_published_atomically_with_payload(run_dir):
 
 
 def test_malformed_commit_marker_raises(run_dir):
-    """A `_COMMITTED` marker that is not a JSON object with a run_id (a
-    plain run_id string, a JSON list, an empty file) is refused with a
+    """A `_COMMITTED` marker that is not a JSON object with a run_id, its
+    batches, their stats and the schema (a plain run_id string, a JSON
+    list, an empty file, a marker without stats/schema) is refused with a
     ValueError naming the file, never read as some other snapshot."""
     sdir = os.path.join(run_dir, "mentions")
     os.makedirs(sdir)
     marker = os.path.join(sdir, "_COMMITTED")
-    for raw in ("somerunid", '["b_x"]', '{"batches": []}', ""):
+    for raw in ("somerunid", '["b_x"]', '{"batches": []}', "",
+                '{"run_id": "r", "batches": ["b_r"]}'):
         with open(marker, "w") as f:
             f.write(raw)
         with pytest.raises(ValueError, match="_COMMITTED"):
@@ -369,7 +370,7 @@ def test_runlog_edges_stage_carries_drop_metrics(spark, corpus_sdf, run_dir,
 
 def test_run_report_reads_only_manifests(spark, tmp_path):
     """run_report: one row per committed stage with exact row counts, read
-    from the manifest layer alone — stages report after the data files
+    from the commit markers alone — stages report after the data files
     are deleted; uncommitted directories are skipped."""
     import os
     import shutil
@@ -387,8 +388,9 @@ def test_run_report_reads_only_manifests(spark, tmp_path):
     assert set(got) == {"alpha", "beta"}
     assert got["alpha"].n_rows == 7 and got["beta"].n_rows == 3
     assert all(r.run_id for r in got.values())
+    assert all(r.n_batches == 1 for r in got.values())
 
-    # manifests alone carry the report: nuke the batch data dirs
+    # the markers alone carry the report: nuke the batch data dirs
     for st in ("alpha", "beta"):
         sdir = os.path.join(run_dir, st)
         for f in os.listdir(sdir):

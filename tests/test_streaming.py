@@ -8,7 +8,7 @@ import pytest
 
 from smart_pdf_md_spark.corpus import corpus_pandas
 from smart_pdf_md_spark.oracle import oracle_mentions
-from smart_pdf_md_spark.plans.manifests import read_manifest, read_stage
+from smart_pdf_md_spark.plans.manifests import read_stage, stage_global_digest
 from smart_pdf_md_spark.streaming.incremental import run_incremental
 
 
@@ -27,8 +27,8 @@ def test_incremental_stream_extracts_exactly_once(spark, tmp_path, corpus_pdf):
     golden_a = oracle_mentions(a)
     assert got1.count() == len(golden_a)
     # micro-batches commit through the SAME snapshot protocol as batch runs
-    m = read_manifest(spark, out_dir, "mentions").toPandas()
-    assert m["row_count"].sum() == read_stage(spark, out_dir, "mentions").count()
+    rows, _ = stage_global_digest(spark, out_dir, "mentions")
+    assert rows == read_stage(spark, out_dir, "mentions").count()
 
     # new files land; restart processes ONLY them (checkpoint dedupe)
     b.to_parquet(os.path.join(corpus_dir, "part-b.parquet"), index=False)
