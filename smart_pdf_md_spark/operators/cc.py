@@ -6,9 +6,16 @@ min-label iteration of Kiveris et al., "Connected Components in MapReduce
 and Beyond", SoCC 2014; the driver-local fast path is textbook union-find,
 Tarjan 1975): every node's label
 converges to the lexicographically smallest node id in its component. The
-driver loop is the ONLY place control returns to the driver in the whole
-pipeline (the fixpoint count — SURVEY.md §3.3); each round is checkpointed
-to cut lineage, otherwise the plan would grow by two joins per iteration.
+distributed fixpoint returns control to the driver once per round (the
+fixpoint count — SURVEY.md §3.3); each round is checkpointed to cut
+lineage, otherwise the plan would grow by two joins per iteration.
+
+Driver-held vocabularies (plans/driver.run_kg, at most
+`linking.LOCAL_LINK_MAX_VOCAB` names) skip the joins altogether:
+`local_entities` builds the entity rows with union-find and
+`local_rewrite` + `rewrite_triples` canonicalize the triples in one pass
+over one broadcast name → (canonical_name, entity_id, conf) relation. Both
+produce exactly what `entity_table` + `canonical_triples` produce.
 
 Determinism: labels are min() over strings — independent of partitioning,
 join order, and parallelism. Entity IDs derive from the canonical (minimum)
@@ -23,7 +30,11 @@ silently emitting half-merged entities.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import hashlib
+from collections import Counter
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -34,9 +45,10 @@ from pyspark.sql import functions as F
 LOCAL_CC_MAX_EDGES = 200_000
 
 
-def _cc_local(rows: list) -> list[tuple[str, str]]:
-    """Union-find with component label = lexicographic min node (identical
-    to the distributed fixpoint's converged state by definition)."""
+def _cc_local(pairs) -> list[tuple[str, str]]:
+    """Union-find over (a, b) pairs with component label = lexicographic min
+    node (identical to the distributed fixpoint's converged state by
+    definition)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -47,8 +59,7 @@ def _cc_local(rows: list) -> list[tuple[str, str]]:
             parent[x], x = root, parent[x]
         return root
 
-    for row in rows:
-        a, b = row.name_a, row.name_b
+    for a, b in pairs:
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -247,3 +258,81 @@ def canonical_triples(triples: DataFrame, entities: DataFrame,
         "file_id", "repo", "content_sha256", "conf",
     )
     return sym_canon.unionByName(imp_canon).distinct()
+
+
+_ENTITY_SCHEMA = ("name string, canonical_name string, entity_id string, "
+                  "component_size bigint")
+
+
+def local_entities(spark: SparkSession, names: list[str],
+                   pairs) -> tuple[list[tuple], DataFrame]:
+    """Driver-side `entity_table` for a driver-held vocabulary and its edge
+    (a, b) pairs: → (entity rows, pandas-backed entities frame), rows and
+    frame as (name, canonical_name, entity_id, component_size)."""
+    comp = dict(_cc_local(pairs))
+    canon = {n: comp.get(n, n) for n in names}
+    size = Counter(canon.values())
+    ids = {c: hashlib.sha256(c.encode("utf-8")).hexdigest()[:16] for c in size}
+    rows = [(n, c, ids[c], size[c]) for n, c in canon.items()]
+    return rows, spark.createDataFrame(
+        pd.DataFrame(rows, columns=["name", "canonical_name", "entity_id",
+                                    "component_size"]),
+        schema=_ENTITY_SCHEMA)
+
+
+def local_rewrite(spark: SparkSession, entities: list[tuple],
+                  edges: list[tuple]) -> DataFrame:
+    """name → (canonical_name, entity_id, conf) for driver-held entity rows
+    and (name_a, name_b, cos) edges, with `canonical_triples`' conf: 1.0 for
+    a name that is its own canonical, else the cosine of the direct
+    (name, canonical) edge, or 0.9 without one, rounded to 4 places by
+    Spark (HALF_UP, as `canonical_triples` rounds; Python's round is
+    half-to-even)."""
+    cos = {}
+    for a, b, c in edges:
+        cos[a, b] = cos[b, a] = c
+    rows = [(n, c, e, 1.0 if n == c else cos.get((n, c), 0.9))
+            for n, c, e, _ in entities]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["name", "canonical_name", "entity_id",
+                                    "score"]),
+        schema="name string, canonical_name string, entity_id string, "
+               "score double")
+    return df.select("name", "canonical_name", "entity_id",
+                     F.round("score", 4).alias("conf"))
+
+
+def rewrite_triples(triples: DataFrame, rewrite: DataFrame) -> DataFrame:
+    """`canonical_triples` in one pass over `triples`: the broadcast
+    `rewrite` relation (see `local_rewrite`) is joined once for the object
+    and once for the CALLS subject. IMPORTS rows keep their object, their
+    conf and the object's own hash as entity_id; other objects missing from
+    `rewrite` keep themselves with conf 1.0. Same rows and column order as
+    `canonical_triples(triples, entities, edges)`."""
+    obj_rw = F.broadcast(rewrite.select(
+        F.col("name").alias("obj"), F.col("canonical_name").alias("_obj_canon"),
+        F.col("entity_id").alias("_obj_eid"), F.col("conf").alias("_obj_conf")))
+    subj_rw = F.broadcast(rewrite.select(
+        F.col("name").alias("subj"),
+        F.col("canonical_name").alias("_subj_canon")))
+    imports = F.col("pred") == "IMPORTS"
+    own_id = F.substring(F.sha2(F.col("obj"), 256), 1, 16)
+    return (
+        triples.join(obj_rw, "obj", "left").join(subj_rw, "subj", "left")
+        .select(
+            F.when(F.col("pred") == "CALLS",
+                   F.coalesce(F.col("_subj_canon"), F.col("subj")))
+            .otherwise(F.col("subj")).alias("subj"),
+            F.col("obj").alias("obj_raw"),
+            F.when(imports, F.col("obj"))
+            .otherwise(F.coalesce(F.col("_obj_canon"), F.col("obj")))
+            .alias("obj"),
+            "pred",
+            F.when(imports, own_id)
+            .otherwise(F.coalesce(F.col("_obj_eid"), own_id)).alias("entity_id"),
+            "file_id", "repo", "content_sha256",
+            F.when(imports, F.col("conf"))
+            .otherwise(F.coalesce(F.col("_obj_conf"), F.lit(1.0))).alias("conf"),
+        )
+        .distinct()
+    )

@@ -39,7 +39,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -104,6 +104,18 @@ def name_vocabulary(mentions: DataFrame,
             .select("name").distinct())
 
 
+def _report_drops(drop_stats: dict[str, int], metrics: dict | None) -> None:
+    """Record the hot-bucket drop counters in ``metrics`` and log a nonzero
+    drop to stderr (both linking paths)."""
+    if metrics is not None:
+        metrics.update(drop_stats)
+    if drop_stats["dropped_buckets"]:
+        import sys
+        print(f"[linking] dropped {drop_stats['dropped_buckets']} hot band "
+              f"buckets ({drop_stats['dropped_band_rows']} band rows) over "
+              f"MAX_BUCKET={MAX_BUCKET}", file=sys.stderr)
+
+
 def candidate_pairs(names: DataFrame,
                     metrics: dict | None = None) -> DataFrame:
     """names(name) → candidate (name_a, name_b) via LSH banding self-join.
@@ -134,13 +146,7 @@ def candidate_pairs(names: DataFrame,
     hot_rows = bucket_sizes.filter(F.col("bn") > MAX_BUCKET).collect()
     drop_stats = {"dropped_buckets": len(hot_rows),
                   "dropped_band_rows": int(sum(r["bn"] for r in hot_rows))}
-    if metrics is not None:
-        metrics.update(drop_stats)
-    if drop_stats["dropped_buckets"]:
-        import sys
-        print(f"[linking] dropped {drop_stats['dropped_buckets']} hot band "
-              f"buckets ({drop_stats['dropped_band_rows']} band rows) over "
-              f"MAX_BUCKET={MAX_BUCKET}", file=sys.stderr)
+    _report_drops(drop_stats, metrics)
     if hot_rows:
         hot = names.sparkSession.createDataFrame(
             [(r["band"], r["band_hash"]) for r in hot_rows],
@@ -283,6 +289,27 @@ def _link_local(name_list: list[str],
 _EDGE_SCHEMA = "name_a string, name_b string, cos double"
 
 
+def collect_vocabulary(mentions: DataFrame) -> list[str] | None:
+    """The name vocabulary as a driver list, or None when it has more than
+    LOCAL_LINK_MAX_VOCAB names (one collect of at most
+    LOCAL_LINK_MAX_VOCAB + 1 rows)."""
+    head = name_vocabulary(mentions).limit(LOCAL_LINK_MAX_VOCAB + 1).collect()
+    return ([row.name for row in head]
+            if len(head) <= LOCAL_LINK_MAX_VOCAB else None)
+
+
+def link_local(spark: SparkSession, name_list: list[str],
+               threshold: float = DEFAULT_COSINE_THRESHOLD,
+               metrics: dict | None = None) -> tuple[list[tuple], DataFrame]:
+    """Link a driver-held vocabulary: → (edge tuples, edges frame). The
+    frame is pandas-backed, so committing it is one write job."""
+    edges, drop_stats = _link_local(name_list, threshold)
+    _report_drops(drop_stats, metrics)
+    return edges, spark.createDataFrame(
+        pd.DataFrame(edges, columns=["name_a", "name_b", "cos"]),
+        schema=_EDGE_SCHEMA)
+
+
 def link_edges(mentions: DataFrame,
                threshold: float = DEFAULT_COSINE_THRESHOLD,
                names: DataFrame | None = None,
@@ -296,11 +323,12 @@ def link_edges(mentions: DataFrame,
     Scale shape: the vocabulary distinct always runs distributed (it reduces
     the mention stream). The quadratic-ish candidate/rescore stage then sees
     ONLY vocabulary-sized data — when that fits on the driver
-    (≤ `local_max_vocab` names), one collect + numpy replaces ~a dozen
-    vocabulary-sized shuffle jobs whose per-job latency, not data, is the
-    cost (measured: ~5s fixed per run at any corpus size). Big vocabularies
-    (the 10^12-file regime) take the distributed banding path unchanged.
-    Set ``local_max_vocab=0`` to force distributed.
+    (≤ `local_max_vocab` names), one collect and the pure-Python pass of
+    `_link_local` replace the vocabulary-sized shuffle jobs of the banding
+    self-join and the TF-IDF rescore, whose per-job latency, not data, is
+    their cost at that size. Big vocabularies (the 10^12-file regime) take
+    the distributed banding path unchanged. Set ``local_max_vocab=0`` to
+    force distributed.
 
     Either path records its hot-bucket drop counters in ``metrics``
     (see candidate_pairs)."""
@@ -309,21 +337,8 @@ def link_edges(mentions: DataFrame,
     if local_max_vocab:
         head = names.limit(local_max_vocab + 1).collect()
         if len(head) <= local_max_vocab:
-            name_list = [row.name for row in head]
-            edges, drop_stats = _link_local(name_list, threshold)
-            if metrics is not None:
-                metrics.update(drop_stats)
-            if drop_stats["dropped_buckets"]:
-                import sys
-                print(f"[linking] dropped {drop_stats['dropped_buckets']} hot "
-                      f"band buckets ({drop_stats['dropped_band_rows']} band "
-                      f"rows) over MAX_BUCKET={MAX_BUCKET}", file=sys.stderr)
-            spark = names.sparkSession
-            if not edges:
-                return spark.createDataFrame([], _EDGE_SCHEMA)
-            return spark.createDataFrame(
-                pd.DataFrame(edges, columns=["name_a", "name_b", "cos"]),
-                schema=_EDGE_SCHEMA)
+            return link_local(names.sparkSession, [row.name for row in head],
+                              threshold, metrics)[1]
     pairs = candidate_pairs(names, metrics=metrics)
     weights = ngram_tfidf(names)
     return score_pairs(pairs, weights, threshold)

@@ -406,10 +406,16 @@ def run_stage(
 
 def pending_inputs(inputs_with_id: DataFrame, spark: SparkSession,
                    run_dir: str, stage: str) -> DataFrame:
-    """J4: inputs not yet present in the committed stage (by file_id)."""
+    """J4: inputs not yet present in the committed stage (by file_id). The
+    stage is an extraction stage (mentions): its FILE_MARKER status rows
+    carry one row per committed file, so the anti-join's build side needs
+    no distinct."""
     if not stage_committed(run_dir, stage):
         return inputs_with_id
-    done = read_stage(spark, run_dir, stage).select("file_id").distinct()
+    from ..operators.extract import FILE_MARKER
+
+    done = read_stage(spark, run_dir, stage) \
+        .filter(F.col("kind") == FILE_MARKER).select("file_id")
     return inputs_with_id.join(done, "file_id", "left_anti")
 
 

@@ -5,9 +5,9 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
+from conftest import jobs_fired
 from pyspark.sql import functions as F
 
 from smart_pdf_md_spark.plans.manifests import (
@@ -19,21 +19,6 @@ from smart_pdf_md_spark.plans.manifests import (
 )
 
 KEYS = ["file_id", "val"]
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs fired by ``fn()``, counted through a fresh job group
-    once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _frame(spark, lo: int, hi: int):
@@ -55,16 +40,17 @@ def test_commit_is_one_job_and_metadata_reads_none(spark, tmp_path):
     ra, rb = str(tmp_path / "a"), str(tmp_path / "b")
     df = spark.range(100).selectExpr("CAST(id AS STRING) AS file_id",
                                      "id * 3 AS val")
-    assert _jobs(spark, lambda: commit_stage(df, ra, "triples", KEYS)) == 1
-    assert _jobs(spark, lambda: commit_stage(df, ra, "triples", KEYS,
-                                             mode="append")) == 1
+    assert jobs_fired(spark, lambda: commit_stage(df, ra, "triples", KEYS)) == 1
+    assert jobs_fired(spark, lambda: commit_stage(df, ra, "triples", KEYS,
+                                                  mode="append")) == 1
     commit_stage(df.repartition(4), rb, "triples", KEYS)
 
-    assert _jobs(spark, lambda: read_stage(spark, ra, "triples")) == 0
-    assert _jobs(spark, lambda: stage_global_digest(spark, ra, "triples")) == 0
-    assert _jobs(spark, lambda: verify_stage_digests(
+    assert jobs_fired(spark, lambda: read_stage(spark, ra, "triples")) == 0
+    assert jobs_fired(spark,
+                      lambda: stage_global_digest(spark, ra, "triples")) == 0
+    assert jobs_fired(spark, lambda: verify_stage_digests(
         spark, ra, rb, ["triples"])) == 0
-    assert _jobs(spark, lambda: run_report(spark, ra)) == 0
+    assert jobs_fired(spark, lambda: run_report(spark, ra)) == 0
 
 
 def test_marker_stats_match_recomputation(spark, tmp_path):

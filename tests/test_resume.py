@@ -43,7 +43,9 @@ def test_full_run_commits_all_stages(spark, corpus_sdf, run_dir):
 def test_killed_run_resumes_without_recompute(spark, corpus_sdf, run_dir):
     run_kg(spark, corpus_sdf, run_dir)
     # simulate a kill after 'edges': drop the later stages' commits
-    for stage in ("entities", "triples_canonical"):
+    rebuilt = ("entities", "triples_canonical")
+    first = {s: stage_global_digest(spark, run_dir, s) for s in rebuilt}
+    for stage in rebuilt:
         shutil.rmtree(os.path.join(run_dir, stage))
     before = {s: _data_files(run_dir, s) for s in ("mentions", "triples", "edges")}
     res = run_kg(spark, corpus_sdf, run_dir)
@@ -52,6 +54,8 @@ def test_killed_run_resumes_without_recompute(spark, corpus_sdf, run_dir):
     assert res["resumed"] == {"mentions": True, "triples": True, "edges": True,
                               "entities": False, "triples_canonical": False}
     assert stage_committed(run_dir, "triples_canonical")
+    # rebuilt from the committed edges, they equal the first run's
+    assert {s: stage_global_digest(spark, run_dir, s) for s in rebuilt} == first
 
 
 @pytest.mark.slow
