@@ -10,12 +10,12 @@ distributed fixpoint returns control to the driver once per round (the
 fixpoint count — SURVEY.md §3.3); each round is checkpointed to cut
 lineage, otherwise the plan would grow by two joins per iteration.
 
-Driver-held vocabularies (plans/driver.run_kg, at most
-`linking.LOCAL_LINK_MAX_VOCAB` names) skip the joins altogether:
-`local_entities` builds the entity rows with union-find and
-`local_rewrite` + `rewrite_triples` canonicalize the triples in one pass
-over one broadcast name → (canonical_name, entity_id, conf) relation. Both
-produce exactly what `entity_table` + `canonical_triples` produce.
+Canonical triples come from one rewrite, `rewrite_triples`: one pass over
+the triples through one broadcast name → (canonical_name, entity_id, conf)
+relation, built by `canonical_triples` from the entities and edges frames
+or, for a driver-held vocabulary (plans/driver.run_kg, at most
+`linking.LOCAL_LINK_MAX_VOCAB` names), by `local_rewrite` from driver rows,
+next to the union-find entity rows of `local_entities`.
 
 Determinism: labels are min() over strings — independent of partitioning,
 join order, and parallelism. Entity IDs derive from the canonical (minimum)
@@ -183,81 +183,26 @@ def entity_table(mentions: DataFrame, edges: DataFrame,
 
 def canonical_triples(triples: DataFrame, entities: DataFrame,
                       edges: DataFrame | None = None) -> DataFrame:
-    """Rewrite symbol objects to canonical entity names.
-
-    IMPORTS objects are modules, not symbols — left untouched. Both joins are
-    broadcast: entity table and edge list are vocabulary-sized (small dims,
-    J1-style).
-
-    `conf` semantics when `edges` is given: 1.0 for objects that are already
-    canonical; the TF-IDF cosine of the direct (raw, canonical) linking edge
-    when one exists; 0.9 for transitive merges (linked through a third
-    variant — confident but unscored).
-    """
-    ent = F.broadcast(
-        entities.select(
-            F.col("name").alias("obj"),
-            F.col("canonical_name"),
-            F.col("entity_id"),
-        )
-    )
-    sym = triples.filter(F.col("pred") != "IMPORTS")
-    imp = triples.filter(F.col("pred") == "IMPORTS")
-    sym_canon = (
-        sym.join(ent, "obj", "left")
-        .select(
-            "subj", "pred",
-            F.coalesce(F.col("canonical_name"), F.col("obj")).alias("obj"),
-            F.col("obj").alias("obj_raw"),
-            F.coalesce(
-                F.col("entity_id"),
-                F.substring(F.sha2(F.col("obj"), 256), 1, 16),
-            ).alias("entity_id"),
-            "file_id", "repo", "content_sha256", "conf",
-        )
-    )
-    if edges is not None:
-        e = edges.select(F.col("name_a").alias("obj_raw"),
-                         F.col("name_b").alias("obj"),
-                         F.col("cos").alias("_link_cos"))
-        e = e.unionByName(
-            edges.select(F.col("name_b").alias("obj_raw"),
-                         F.col("name_a").alias("obj"),
-                         F.col("cos").alias("_link_cos")))
-        sym_canon = (
-            sym_canon.join(F.broadcast(e), ["obj_raw", "obj"], "left")
-            .withColumn(
-                "conf",
-                F.when(F.col("obj_raw") == F.col("obj"), F.lit(1.0))
-                .otherwise(F.round(F.coalesce(F.col("_link_cos"), F.lit(0.9)), 4)),
-            )
-            .drop("_link_cos")
-        )
-    # CALLS subjects live in symbol space too (north_star: symbol→symbol) —
-    # rewrite them through the same broadcast entity map. Module-level calls
-    # carry a file-ref subj, which never matches the symbol vocabulary and
-    # falls through coalesce untouched. conf stays obj-linking-scoped.
-    subj_ent = F.broadcast(
-        entities.select(F.col("name").alias("subj"),
-                        F.col("canonical_name").alias("_subj_canon"))
-    )
-    sym_canon = (
-        sym_canon.join(subj_ent, "subj", "left")
-        .withColumn(
-            "subj",
-            F.when(F.col("pred") == "CALLS",
-                   F.coalesce(F.col("_subj_canon"), F.col("subj")))
-            .otherwise(F.col("subj")),
-        )
-        .drop("_subj_canon")
-    )
-    imp_canon = imp.select(
-        "subj", "pred", "obj",
-        F.col("obj").alias("obj_raw"),
-        F.substring(F.sha2(F.col("obj"), 256), 1, 16).alias("entity_id"),
-        "file_id", "repo", "content_sha256", "conf",
-    )
-    return sym_canon.unionByName(imp_canon).distinct()
+    """Rewrite symbol objects (and CALLS subjects) to canonical entity names:
+    `rewrite_triples` through the name → (canonical_name, entity_id, conf)
+    relation of ``entities``. `conf` when `edges` is given: 1.0 for names
+    already canonical; the cosine of the direct (raw, canonical) linking
+    edge when one exists; 0.9 for transitive merges (linked through a third
+    variant — confident but unscored); rounded HALF_UP to 4 places. Without
+    `edges` every triple keeps its own conf."""
+    rel = entities.select("name", "canonical_name", "entity_id")
+    if edges is None:
+        return rewrite_triples(triples, rel.withColumn(
+            "conf", F.lit(None).cast("double")))
+    # edges hold name_a < name_b and a canonical name is its component's
+    # minimum, so a name's direct edge is (canonical_name, name)
+    direct = edges.select(F.col("name_b").alias("name"),
+                          F.col("name_a").alias("canonical_name"), "cos")
+    conf = F.when(F.col("name") == F.col("canonical_name"), F.lit(1.0)) \
+        .otherwise(F.coalesce(F.col("cos"), F.lit(0.9)))
+    return rewrite_triples(triples, rel.join(
+        direct, ["name", "canonical_name"], "left").select(
+        "name", "canonical_name", "entity_id", F.round(conf, 4).alias("conf")))
 
 
 _ENTITY_SCHEMA = ("name string, canonical_name string, entity_id string, "
@@ -282,15 +227,11 @@ def local_entities(spark: SparkSession, names: list[str],
 
 def local_rewrite(spark: SparkSession, entities: list[tuple],
                   edges: list[tuple]) -> DataFrame:
-    """name → (canonical_name, entity_id, conf) for driver-held entity rows
-    and (name_a, name_b, cos) edges, with `canonical_triples`' conf: 1.0 for
-    a name that is its own canonical, else the cosine of the direct
-    (name, canonical) edge, or 0.9 without one, rounded to 4 places by
-    Spark (HALF_UP, as `canonical_triples` rounds; Python's round is
-    half-to-even)."""
-    cos = {}
-    for a, b, c in edges:
-        cos[a, b] = cos[b, a] = c
+    """The rewrite relation name → (canonical_name, entity_id, conf) of
+    driver-held entity rows and (name_a, name_b, cos) edges, with
+    `canonical_triples`' conf rule, rounded by Spark (HALF_UP, as
+    `canonical_triples` rounds; Python's round is half-to-even)."""
+    cos = {(b, a): c for a, b, c in edges}  # keyed (name, canonical_name)
     rows = [(n, c, e, 1.0 if n == c else cos.get((n, c), 0.9))
             for n, c, e, _ in entities]
     df = spark.createDataFrame(
@@ -303,12 +244,14 @@ def local_rewrite(spark: SparkSession, entities: list[tuple],
 
 
 def rewrite_triples(triples: DataFrame, rewrite: DataFrame) -> DataFrame:
-    """`canonical_triples` in one pass over `triples`: the broadcast
-    `rewrite` relation (see `local_rewrite`) is joined once for the object
-    and once for the CALLS subject. IMPORTS rows keep their object, their
-    conf and the object's own hash as entity_id; other objects missing from
-    `rewrite` keep themselves with conf 1.0. Same rows and column order as
-    `canonical_triples(triples, entities, edges)`."""
+    """Canonicalize `triples` in one pass: the broadcast `rewrite` relation
+    name → (canonical_name, entity_id, conf) is joined once for the object
+    and once for the CALLS subject. IMPORTS objects are modules, not
+    symbols: those rows keep their object and conf, with the object's own
+    hash as entity_id. Other objects missing from `rewrite` keep themselves,
+    and a null relation conf keeps the triple's own. Module-level calls
+    carry a file-ref subj, which never matches the symbol vocabulary and
+    stays as it is."""
     obj_rw = F.broadcast(rewrite.select(
         F.col("name").alias("obj"), F.col("canonical_name").alias("_obj_canon"),
         F.col("entity_id").alias("_obj_eid"), F.col("conf").alias("_obj_conf")))
@@ -332,7 +275,8 @@ def rewrite_triples(triples: DataFrame, rewrite: DataFrame) -> DataFrame:
             .otherwise(F.coalesce(F.col("_obj_eid"), own_id)).alias("entity_id"),
             "file_id", "repo", "content_sha256",
             F.when(imports, F.col("conf"))
-            .otherwise(F.coalesce(F.col("_obj_conf"), F.lit(1.0))).alias("conf"),
+            .otherwise(F.coalesce(F.col("_obj_conf"), F.col("conf")))
+            .alias("conf"),
         )
         .distinct()
     )

@@ -5,6 +5,7 @@ distributed operators they stand in for."""
 from __future__ import annotations
 
 import uuid
+from collections import Counter
 
 import pytest
 from conftest import group_jobs, jobs_fired, set_job_group
@@ -96,3 +97,42 @@ def test_driver_tail_matches_distributed_operators(spark, committed):
     finally:
         edges.unpersist()
         ents.unpersist()
+
+
+CALLER_VARIANTS = '''import os
+
+
+def load_data(path):
+    return parse(path)
+
+
+def loadData(path):
+    return parse(path)
+
+
+def parse(text):
+    return os.path.basename(text)
+'''
+
+
+def test_caller_variants_collapse_to_one_calls_row(spark, tmp_path):
+    """Two caller variants in one file that call the same callee become one
+    (canonical caller, CALLS, parse) row, on run_kg's driver path and
+    through canonical_triples; IMPORTS rows and rows whose subject stays
+    keep one row each."""
+    files = spark.createDataFrame(
+        [("acme/etl", "etl/io.py", "c0ffee", "python", CALLER_VARIANTS)],
+        "repo string, path string, commit string, lang string, content string")
+    res = run_kg(spark, files, str(tmp_path / "run"))
+    mentions, triples = res["mentions"], res["triples"]
+    edges = link_edges(mentions, local_max_vocab=0)
+    by_operators = canonical_triples(triples, entity_table(mentions, edges),
+                                     edges)
+    want = Counter((r.subj, r.pred, r.obj) for r in triples.collect()
+                   if r.subj not in ("load_data", "loadData"))
+    want["loadData", "CALLS", "parse"] = 1   # 'loadData' < 'load_data'
+    assert want["acme/etl/etl/io.py", "IMPORTS", "os"] == 1
+    for canon in (res["triples_canonical"], by_operators):
+        rows = canon.collect()
+        assert {r.file_id for r in rows} == {triples.first().file_id}
+        assert Counter((r.subj, r.pred, r.obj_raw) for r in rows) == want

@@ -82,17 +82,24 @@ def test_large_vocab_linking_quality_and_bounds(spark, big_vocab_mentions):
 @pytest.mark.slow
 def test_local_and_distributed_paths_agree(spark, big_vocab_mentions):
     """The driver-local small-vocab fast path must be indistinguishable from
-    the distributed banding/rescore/fixpoint path — same edge set, same
-    cosines (to float-summation-order noise), identical components."""
+    the distributed path (the same kernel over Spark-grouped buckets) and
+    the CC fixpoint — same edge set, same cosines (to 1e-9), same hot-bucket
+    drops, identical components."""
     from smart_pdf_md_spark.operators.cc import connected_components
 
     names = checkpointed_vocabulary(big_vocab_mentions, partitions=8)
-    e_local = {(r.name_a, r.name_b): r.cos
-               for r in link_edges(big_vocab_mentions, names=names).collect()}
-    e_dist_df = link_edges(big_vocab_mentions, names=names, local_max_vocab=0)
+    m_local: dict = {}
+    m_dist: dict = {}
+    e_local = {(r.name_a, r.name_b): r.cos for r in link_edges(
+        big_vocab_mentions, names=names, metrics=m_local).collect()}
+    e_dist_df = link_edges(big_vocab_mentions, names=names, local_max_vocab=0,
+                           metrics=m_dist)
     e_dist = {(r.name_a, r.name_b): r.cos for r in e_dist_df.collect()}
     assert set(e_local) == set(e_dist)
     assert max(abs(e_local[k] - e_dist[k]) for k in e_local) < 1e-9
+    assert len(e_local) == 16_062
+    assert m_local == m_dist == {"dropped_buckets": 356,
+                                 "dropped_band_rows": 53_514}
 
     cc_local = {(r.name, r.component)
                 for r in connected_components(e_dist_df).collect()}
