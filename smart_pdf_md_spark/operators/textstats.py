@@ -623,7 +623,7 @@ def pack_sequences(chunks: DataFrame, budget_tokens: int = 2048,
         f"{f.name} {f.dataType.simpleString()}" for f in chunks.schema.fields
     ) + ", pack_id string, pack_tokens int, overflow boolean"
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         bucket = int(key[0])
         pdf = pdf.sort_values(
             [len_col, "doc_id", "chunk_idx"],

@@ -60,7 +60,7 @@ from ..operators.textstats import (
     train_val_split,
     winnow_containment_pairs,
 )
-from .manifests import run_stage
+from .manifests import run_stage, stage_rows
 
 
 def run_curation(
@@ -381,6 +381,7 @@ def run_curation(
     _note("filtered")
 
     upstream, upstream_name = filtered, "filtered"
+    clean = None
     if benchmarks is not None:
         def build_clean() -> DataFrame:
             gate = decontaminate_bloom if decontam_via == "bloom" \
@@ -646,58 +647,34 @@ def run_curation(
                     "budget_tokens": mix_budget_tokens, "by": mix_by})
         _note("mix")
 
-    # one agg per committed stage — exact, cheap (reads the snapshots)
-    summary = {
-        "docs_in": docs.count(),
-        "after_filter": filtered.count(),
-        "after_dedup": kept.count(),
-        "chunks": chunks.count(),
-    }
-    out = {
-        "scrubbed": scrubbed,
-        "filtered": filtered,
-        "kept": kept,
-        "chunks": chunks,
-        "resumed": resumed,
-        "summary": summary,
-    }
-    if urlgate is not None:
-        summary["after_urlgate"] = urlgate.count()
-        out["urlgate"] = urlgate
-    if benchmarks is not None:
-        summary["after_decontam"] = clean.count()
-        out["clean"] = clean
-    if lm_stage is not None:
-        summary["after_lm"] = lm_stage.count()
-        out["lm"] = lm_stage
+    # every stage count is the committed row count in its marker (no job)
+    counted = {"after_urlgate": "urlgate", "after_filter": "filtered",
+               "after_decontam": "clean", "after_classifier": "classifier",
+               "after_lm": "lm", "after_dsir": "dsir", "after_dedup": "kept",
+               "after_semdedup": "semdedup", "after_spans": "spans",
+               "chunks": "chunks", "mix_rows": "mix"}
+    summary = {"docs_in": docs.count(),
+               **{k: stage_rows(run_dir, st) for k, st in counted.items()
+                  if st in resumed}}
+    stages = {"urlgate": urlgate, "scrubbed": scrubbed, "lines": lines_stage,
+              "filtered": filtered, "clean": clean, "classifier": clf_stage,
+              "lm": lm_stage, "dsir": dsir_stage, "kept": kept,
+              "semdedup": sem_stage, "spans": spans_stage, "chunks": chunks,
+              "split": split_stage, "mix": mix_stage}
+    out = {**{k: v for k, v in stages.items() if v is not None},
+           "resumed": resumed, "summary": summary}
     if lines_stage is not None:
         summary["lines_removed"] = int(lines_stage.agg(
             F.coalesce(F.sum("n_removed_lines"), F.lit(0))).collect()[0][0])
-        out["lines"] = lines_stage
-    if clf_stage is not None:
-        summary["after_classifier"] = clf_stage.count()
-        out["classifier"] = clf_stage
-    if dsir_stage is not None:
-        summary["after_dsir"] = dsir_stage.count()
-        out["dsir"] = dsir_stage
-    if sem_stage is not None:
-        summary["after_semdedup"] = sem_stage.count()
-        out["semdedup"] = sem_stage
-    if spans_stage is not None:
-        summary["after_spans"] = spans_stage.count()
-        if remove_dup_spans:
-            summary["span_chars_removed"] = int(spans_stage.agg(
-                F.coalesce(F.sum("n_removed_chars"), F.lit(0)))
-                .collect()[0][0])
-        out["spans"] = spans_stage
+    if spans_stage is not None and remove_dup_spans:
+        summary["span_chars_removed"] = int(spans_stage.agg(
+            F.coalesce(F.sum("n_removed_chars"), F.lit(0))).collect()[0][0])
     if split_stage is not None:
         sc = {r["split"]: r["n"] for r in split_stage.groupBy("split")
               .agg(F.count("*").alias("n")).collect()}
         summary["train_chunks"] = int(sc.get("train", 0))
         summary["val_chunks"] = int(sc.get("val", 0))
-        out["split"] = split_stage
     if mix_stage is not None:
-        summary["mix_rows"] = mix_stage.count()
         # per-domain token totals + epoch counts — the audit the mixture
         # table is specified in (Pile/Llama-style recipes)
         summary["mix_domains"] = {
@@ -706,5 +683,4 @@ def run_curation(
             for r in mix_stage.groupBy(mix_by)
             .agg(F.sum("chunk_len").alias("tokens"),
                  (F.max("epoch") + 1).alias("epochs")).collect()}
-        out["mix"] = mix_stage
     return out

@@ -39,6 +39,7 @@ from .manifests import (
     read_stage,
     run_stage,
     stage_committed,
+    stage_metrics,
 )
 from .pipeline import build_mentions, triples_from_mentions
 
@@ -60,24 +61,23 @@ def run_kg(
 ) -> dict:
     """Full resumable run. Returns stage DataFrames + resume flags.
     ``on_stage(stage, resumed, metrics=None)`` fires after each stage
-    commit/resume — the S9 run-log hook (see runlog.JsonRunLog.stage_hook).
-    The edges stage carries the linking hot-bucket drop counters
-    (``dropped_buckets``/``dropped_band_rows``) in ``metrics``: a 100 TB
-    operator's drop rate must reach the machine-readable log, not just
-    stderr (r3 VERDICT #7). A resumed edges stage never re-linked, so it
-    reports no counters.
+    commit/resume — the S9 run-log hook (see runlog.JsonRunLog.stage_hook)
+    — with the counters recorded in the stage's commit marker. The edges
+    stage records the linking hot-bucket drop counters
+    (``dropped_buckets``/``dropped_band_rows``): a 100 TB operator's drop
+    rate must reach the machine-readable log, not just stderr (r3 VERDICT
+    #7), and a resumed edges stage reports the counters of the run that
+    committed it.
     ``forced_route`` is the reference's ``-e/--engine`` (cli.py:105-137):
     force one extractor family; unknown values fail per file with rc 9.
     Colocated duplicate contents are extracted once by the per-partition
     extraction memo (operators/extract.py)."""
     resumed: dict[str, bool] = {}
 
-    def _note(stage: str, metrics: dict | None = None) -> None:
+    def _note(stage: str) -> None:
         if on_stage is not None:
-            if metrics:
-                on_stage(stage, resumed[stage], metrics=metrics)
-            else:
-                on_stage(stage, resumed[stage])
+            on_stage(stage, resumed[stage],
+                     metrics=stage_metrics(run_dir, stage))
 
     extracted, resumed["mentions"] = run_stage(
         spark, run_dir, "mentions",
@@ -97,14 +97,13 @@ def run_kg(
     )
     _note("triples")
     tail = _VocabularyTail(mentions, link_threshold)
-    # filled only if linking runs: a resumed stage leaves it empty
     edge_metrics: dict = {}
     edges, resumed["edges"] = run_stage(
         spark, run_dir, "edges", lambda: tail.edges(edge_metrics),
         ["name_a", "name_b"],
-        deps=["mentions"],
+        deps=["mentions"], metrics=edge_metrics,
     )
-    _note("edges", edge_metrics)
+    _note("edges")
     entities, resumed["entities"] = run_stage(
         spark, run_dir, "entities", lambda: tail.entities(edges),
         ["name", "canonical_name"],

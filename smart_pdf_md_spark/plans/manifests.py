@@ -12,11 +12,14 @@ manifest table partitioned by run. The sandbox has no Iceberg jar
 file, behind one small interface:
 
     run_dir/<stage>/data/b_<run_id>/      one immutable batch dir per commit
-    run_dir/<stage>/_COMMITTED            JSON snapshot pointer, published
-                                          LAST via temp-file + os.replace:
+    run_dir/<stage>/_COMMITTED            JSON snapshot pointer, the stage's
+                                          only record, published LAST via
+                                          temp-file + os.replace:
                                           {"run_id", "batches", "stats":
                                           {batch: {"rows", "digest_xxh64"}},
-                                          "schema"}
+                                          "schema", "deps": {upstream:
+                                          run_id}, "params": digest|null,
+                                          "metrics": {counter: value}}
     run_dir/<stage>/_COMMIT_LOCK          per-stage writer lock (hardlink-
                                           published {pid, token, start}
                                           file; dead holders stolen) — the
@@ -39,7 +42,11 @@ Spark job and never re-reads history. `schema` is the written schema with
 every field nullable (what a parquet read returns); readers pass it to
 `spark.read.schema`, so no footer-inference job fires, and every metadata
 reader (`stage_global_digest`, `verify_stage_digests`, `run_report`) is a
-JSON read.
+JSON read. The marker also records what the snapshot was built from — the
+upstream stages' run_ids and the params digest, which `stage_fresh`
+compares — and the operator counters the build reported (`metrics`), so
+one atomic swap publishes data, provenance and counters together: a kill
+can never pair a new provenance record with an old snapshot.
 
 File-level incremental resume (J4): `pending_inputs` anti-joins the input
 against the file_ids already present in a committed mentions stage, so an
@@ -223,16 +230,12 @@ def stage_run_id(run_dir: str, stage: str) -> str | None:
     return m["run_id"] if m else None
 
 
-def _deps_path(run_dir: str, stage: str) -> str:
-    return os.path.join(_stage_dir(run_dir, stage), "_DEPS.json")
-
-
 def params_hash(params: dict | None) -> str | None:
-    """Canonical digest of the stage-relevant parameters, recorded in
-    _DEPS.json under ``__params__``: a committed stage built with DIFFERENT
-    knobs (thresholds, fractions, chunk sizes) is stale even when its
-    upstream run_ids match — resuming it would silently serve data computed
-    under the old knobs (ADVICE r4)."""
+    """Canonical digest of the stage-relevant parameters, recorded in the
+    marker: a committed stage built with DIFFERENT knobs (thresholds,
+    fractions, chunk sizes) is stale even when its upstream run_ids match —
+    resuming it would silently serve data computed under the old knobs
+    (ADVICE r4)."""
     if params is None:
         return None
     return hashlib.sha256(
@@ -242,22 +245,16 @@ def params_hash(params: dict | None) -> str | None:
 def stage_fresh(run_dir: str, stage: str, deps: list[str] | None,
                 params: dict | None = None) -> bool:
     """Committed AND its recorded upstream run_ids still match the current
-    commits AND (when the stage takes parameters) the recorded params digest
-    matches — a stage whose input was re-committed (e.g. incremental append
-    to mentions) or whose knobs changed is stale and must recompute, or
-    resume would silently serve results computed from the old input."""
-    if not stage_committed(run_dir, stage):
+    commits AND its recorded params digest matches `params` — a stage whose
+    input was re-committed (e.g. incremental append to mentions) or whose
+    knobs changed is stale and must recompute, or resume would silently
+    serve results computed from the old input. A marker without these
+    records (written before they existed) is stale for any declared dep
+    or params."""
+    marker = _read_marker(run_dir, stage)
+    if marker is None or marker.get("params") != params_hash(params):
         return False
-    ph = params_hash(params)
-    if not deps and ph is None:
-        return True
-    dp = _deps_path(run_dir, stage)
-    if not os.path.exists(dp):
-        return False  # legacy commit without dep records → be safe, recompute
-    with open(dp) as f:
-        recorded = json.load(f)
-    if ph is not None and recorded.get("__params__") != ph:
-        return False
+    recorded = marker.get("deps", {})
     return all(recorded.get(d) == stage_run_id(run_dir, d)
                for d in (deps or []))
 
@@ -268,6 +265,22 @@ def _committed_marker(run_dir: str, stage: str) -> dict:
         raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
                                 f"under {run_dir!r}")
     return marker
+
+
+def _marker_rows(marker: dict) -> int:
+    return sum(marker["stats"][b]["rows"] for b in marker["batches"])
+
+
+def stage_rows(run_dir: str, stage: str) -> int:
+    """Committed row count, summed from the marker's per-batch stats — a
+    JSON read, no Spark job."""
+    return _marker_rows(_committed_marker(run_dir, stage))
+
+
+def stage_metrics(run_dir: str, stage: str) -> dict:
+    """The operator counters recorded by the stage's last commit ({} when
+    its build reported none)."""
+    return _committed_marker(run_dir, stage).get("metrics", {})
 
 
 def _read_batches(spark: SparkSession, run_dir: str, stage: str,
@@ -308,10 +321,13 @@ def commit_stage(
     mode: str = "overwrite",
     deps: list[str] | None = None,
     params: dict | None = None,
+    metrics: dict | None = None,
 ) -> DataFrame:
     """Write a fresh immutable batch dir, then atomically publish the
     snapshot pointer with the batch's (rows, digest) — observed on the
-    write job itself, so the commit is exactly one Spark job. A kill
+    write job itself, so the commit is exactly one Spark job — together
+    with the `deps`' current run_ids, the `params` digest and the
+    operator `metrics` counters. A kill
     anywhere before the pointer swap leaves the previous snapshot fully
     intact and the new batch invisible (no torn append — ADVICE r1).
 
@@ -360,15 +376,12 @@ def commit_stage(
         stats = {**(prev["stats"] if prev else {}),
                  batch: {"rows": got["rows"],
                          "digest_xxh64": f"{got['digest'] & _U64:016x}"}}
-        ph = params_hash(params)
-        if deps or ph is not None:
-            record = {d: stage_run_id(run_dir, d) for d in (deps or [])}
-            if ph is not None:
-                record["__params__"] = ph
-            _write_atomic(_deps_path(run_dir, stage), json.dumps(record))
         marker = {"run_id": run_id, "batches": batches, "stats": stats,
                   "schema": (prev["schema"] if prev
-                             else json.loads(schema.json()))}
+                             else json.loads(schema.json())),
+                  "deps": {d: stage_run_id(run_dir, d) for d in deps or []},
+                  "params": params_hash(params),
+                  "metrics": metrics or {}}
         _write_atomic(os.path.join(sdir, "_COMMITTED"), json.dumps(marker))
         _gc_stage(sdir, keep_batches=set(batches))
         return _read_batches(df.sparkSession, run_dir, stage, marker)
@@ -390,18 +403,20 @@ def run_stage(
     stage: str,
     build,  # Callable[[], DataFrame]
     key_cols: list[str],
-    force: bool = False,
     deps: list[str] | None = None,
     params: dict | None = None,
+    metrics: dict | None = None,
 ) -> tuple[DataFrame, bool]:
     """Resume-or-compute. Returns (stage df, was_resumed). A committed stage
     resumes only while the run_ids of its `deps` stages AND its `params`
     digest are unchanged (ADVICE r4: rerunning with different knobs must
-    rebuild, not serve stale data)."""
-    if not force and stage_fresh(run_dir, stage, deps, params):
+    rebuild, not serve stale data). `build` may fill `metrics` with
+    operator counters; they are committed into the marker with the batch
+    (read them back with `stage_metrics`)."""
+    if stage_fresh(run_dir, stage, deps, params):
         return read_stage(spark, run_dir, stage), True
     return commit_stage(build(), run_dir, stage, key_cols, deps=deps,
-                        params=params), False
+                        params=params, metrics=metrics), False
 
 
 def pending_inputs(inputs_with_id: DataFrame, spark: SparkSession,
@@ -428,12 +443,10 @@ def stage_global_digest(spark: SparkSession, run_dir: str,
     same input at any parallelism, or split into different batches,
     produce the same value. A JSON read: `spark` is not used."""
     marker = _committed_marker(run_dir, stage)
-    rows = digest = 0
+    digest = 0
     for b in marker["batches"]:
-        st = marker["stats"][b]
-        rows += st["rows"]
-        digest ^= int(st["digest_xxh64"], 16)
-    return rows, digest
+        digest ^= int(marker["stats"][b]["digest_xxh64"], 16)
+    return _marker_rows(marker), digest
 
 
 def verify_stage_digests(spark: SparkSession, run_dir_a: str, run_dir_b: str,
@@ -471,7 +484,7 @@ def run_report(spark: SparkSession, run_dir: str) -> DataFrame:
         marker = _read_marker(run_dir, name)
         if marker is None:
             continue
-        n_rows = sum(marker["stats"][b]["rows"] for b in marker["batches"])
-        rows.append((name, marker["run_id"], n_rows, len(marker["batches"])))
+        rows.append((name, marker["run_id"], _marker_rows(marker),
+                     len(marker["batches"])))
     return spark.createDataFrame(
         rows, "stage string, run_id string, n_rows long, n_batches long")

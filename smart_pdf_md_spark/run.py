@@ -212,6 +212,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .corpus import corpus_df
     from .plans.driver import run_kg
+    from .plans.manifests import stage_rows
     from .plans.pipeline import build_triples
     from .session import build_session
     from .sources.tables import load_repo_files, write_triples
@@ -246,7 +247,7 @@ def main(argv: list[str] | None = None) -> int:
                         timeout_sec=args.timeout)
         from .plans.pipeline import run_summary
         s = run_summary(result["status"]).collect()[0]
-        n_triples = result["triples_canonical"].count()
+        n_triples = stage_rows(args.run_dir, "triples_canonical")
         if args.out:
             write_triples(result["triples_canonical"], args.out)
         if args.failures_out:

@@ -55,13 +55,12 @@ class JsonRunLog:
 
     def stage_hook(self):
         """Callback for run_kg(on_stage=...): one line per stage commit.
-        Stage-level operator metrics (e.g. the linking hot-bucket drop
-        counters for the edges stage) land as extra JSON fields, so a
-        log consumer can alert on drop rates without scraping stderr."""
-        def on_stage(stage: str, resumed: bool, rows: int | None = None,
+        The operator counters recorded in the stage's commit marker
+        (e.g. the linking hot-bucket drop counters for the edges stage,
+        resumed or not) land as extra JSON fields, so a log consumer can
+        alert on drop rates without scraping stderr."""
+        def on_stage(stage: str, resumed: bool,
                      metrics: dict | None = None) -> None:
             self.log(f"stage {stage} {'resumed' if resumed else 'committed'}",
-                     stage=stage, resumed=resumed,
-                     **({"rows": rows} if rows is not None else {}),
-                     **(metrics or {}))
+                     stage=stage, resumed=resumed, **(metrics or {}))
         return on_stage

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import jobs_fired
 from pyspark.sql import functions as F
 
 from smart_pdf_md_spark.plans.curation import run_curation
@@ -92,6 +93,21 @@ def test_curation_resumes_all_stages(spark, curation_docs, tmp_path):
     second = run_curation(spark, curation_docs, run_dir)
     assert all(second["resumed"].values())
     assert first["summary"] == second["summary"]
+
+
+def test_resumed_curation_summary_reads_the_markers(spark, curation_docs,
+                                                   tmp_path):
+    """A fully resumed default run fires only the input's docs.count():
+    every stage count in the summary is the committed row count in that
+    stage's marker."""
+    run_dir = str(tmp_path / "cur")
+    first = run_curation(spark, curation_docs, run_dir)
+    second = []
+    jobs = jobs_fired(spark, lambda: second.append(
+        run_curation(spark, curation_docs, run_dir)))
+    assert all(second[0]["resumed"].values())
+    assert second[0]["summary"] == first["summary"]
+    assert jobs == jobs_fired(spark, curation_docs.count)
 
 
 @pytest.mark.slow
