@@ -240,13 +240,6 @@ _J4_SQL = ("SELECT c_custkey, c_name FROM customer "
            "AND o_totalprice > 300000)")
 
 
-def _j5_semi(spark, sf):
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders").filter(F.col("o_totalprice") > 100000)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi") \
-        .select("c_custkey", "c_mktsegment")
-
-
 def _w1_topk(spark, sf):
     from pyspark.sql import Window
     o = _t(spark, sf, "orders")
@@ -1339,9 +1332,10 @@ FROM pair JOIN s USING (src) JOIN d USING (dst) CROSS JOIN t
 """
 
 
-# A row rotated off the board takes its builder and SQL with it; its
-# operator family keeps its pytest coverage. tests/test_entry_reachability.py
-# fails on any builder or _*_SQL constant that nothing reaches.
+# A row rotated off the board takes its builder and SQL with it, and an
+# operator that no remaining row nor any pipeline reaches goes too.
+# tests/test_entry_reachability.py fails on any function, class or
+# _*_SQL constant that no entry point reaches.
 _PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q1_pricing_summary": (_q1_pricing, _Q1_SQL),
     "s1_scan_project": (_s1_scan_project, _S1_SQL),
@@ -1377,9 +1371,9 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # r4 board rotation (r3 VERDICT next-round #1): the 50-slot cap forces
     # swaps, not appends — w2_running_sum (window machinery pinned by w1/w3),
     # mm_frame_sample (multimodal scan path pinned by mm_media_meta) and
-    # dedup_simhash (pigeonhole-exactness pinned by
-    # test_simhash_banded_exact_at_hamming3) rotate OFF; the three r3
-    # operators the board never swept rotate ON.
+    # dedup_simhash rotate OFF (SimHash and frame sampling were later
+    # deleted: no entry point reached them); the three r3 operators the
+    # board never swept rotate ON.
     "j8_range_join": (_j8_range_join, _J8_SQL),
     "mean_pool": (_mean_pool, _MEAN_POOL_SQL),
     "ann_topk_ivf": (_ann_ivf, None),
@@ -1397,9 +1391,10 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # r6 board rotation (r5 VERDICT next-round #1/#2) — the 50-slot cap
     # forces swaps: f2_string_funcs OFF (scalar-function machinery pinned
     # by f1 + the text_* oracle pairs), events_tumbling_window OFF (the
-    # window/agg family is pinned by w1/w3 + the streaming pytest suite),
-    # mm_extract_features OFF (the multimodal Arrow path is pinned by the
-    # mm_media_meta oracle pair + pytest). IN: the three r5 operators whose
+    # window/agg family is pinned by w1/w3; the streaming window helpers
+    # were later deleted), mm_extract_features OFF (the multimodal path is
+    # pinned by the mm_media_meta oracle pair; extract_features was later
+    # deleted). IN: the three r5 operators whose
     # DuckDB parity SQL already existed in tests — now full oracle rows.
     "bm25_topk": (_bm25_topk_q, _BM25_SQL),
     "decontaminate": (_decontaminate_q, _DECONTAM_SQL),
@@ -1409,8 +1404,8 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # pinned by text_quality_score + s3's lang filter), s4_include_glob /
     # s5_exclude_glob (glob semantics stay pinned by
     # test_pipeline_pr.py::test_include_exclude_globs; the scan path by
-    # s1), ann_topk_lsh (the hyperplane-LSH family keeps its recall gate
-    # in tests; IVF + PQ now carry the ANN rows-only slots), and
+    # s1), ann_topk_lsh (the hyperplane-LSH operator was later deleted;
+    # IVF + PQ carry the ANN rows-only slots), and
     # dedup_clusters (exact CC tests + the kg_canonical_triples row pin
     # the clustering machinery). ON: the three round-6 operators whose
     # DuckDB parity SQL already existed in tests — now full oracle rows —
@@ -1425,8 +1420,9 @@ _PAIRS: dict[str, tuple[Callable, str | None]] = {
     # sibling still on board: f1_json_extract (scalar-function machinery
     # pinned by the text_* oracle pairs + f2 pytest), a2_first_error (the
     # run-summary family pinned by a1_run_summary + the status-taxonomy
-    # tests), j5_semi_join (the skew family pinned by j5b_salted_agg +
-    # operators/skew.py tests). ON: the three round-7 operators whose
+    # tests), j5_semi_join (the skew family pinned by j5b_salted_agg; its
+    # builder, kept as a plan pin, was later deleted). ON: the three
+    # round-7 operators whose
     # DuckDB parity SQL already existed in tests — now full oracle rows.
     "oov_rate": (_oov_rate_q, _OOV_SQL),
     "span_coverage": (_span_coverage_q, _SPAN_COV_SQL),

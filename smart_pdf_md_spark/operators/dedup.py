@@ -1,6 +1,6 @@
 """Deduplication operators for a large-scale training-data pipeline.
 
-Five strategies, cheapest→richest; each keeps the Spark-first discipline
+Four strategies, cheapest→richest; each keeps the Spark-first discipline
 (set-based DataFrame ops, broadcast/shuffle visible to Catalyst, content-
 derived deterministic winners — never "first row wins"):
 
@@ -9,8 +9,6 @@ derived deterministic winners — never "first row wins"):
                  postings (rare shingles dropped caps the join fanout).
 - minhash-lsh   reuses operators/linking.py banding (signatures once per
                  doc, pairs only within band buckets) — the 100 TB path.
-- simhash     64-bit near-dup signature via md5-derived bit votes; hamming
-              buckets by 16-bit bands.
 - embedding-cosine  near-dup in vector space over `embeddings`.
 
 The vendored-duplicate corpus fixture (FIXTURES.md: identical files across
@@ -109,7 +107,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
       where the quadratic pair work prefix filtering would remove is
       already tiny and the filter's extra sort + verify shuffles dominate.
     - ``"prefix"``: PPJoin prefix-filtered candidates + exact verify
-      (see :func:`ngram_jaccard_pairs_prefix`) — wins on boilerplate-heavy
+      (see :func:`_prefix_verified_pairs`) — wins on boilerplate-heavy
       corpora where postings run long.
     - ``"auto"``: ONE extra tiny agg (p99 posting length, computed on the
       postings table the cap needs anyway) picks the regime at the
@@ -183,8 +181,15 @@ def _score_pairs(inter: DataFrame, sizes: DataFrame,
 def _prefix_verified_pairs(sh: DataFrame, sizes: DataFrame,
                            threshold: float) -> DataFrame:
     """PPJoin core over capped postings `sh`: prefix candidates + exact
-    verify. `sh` is read three times (prefix ranking, verify ×2) — the
-    caller holds it cached.
+    verify (Bayardo/Ma/Srikant, WWW 2007; Xiao et al. PPJoin). `sh` is read
+    three times (prefix ranking, verify ×2) — the caller holds it cached.
+
+    Under any global shingle order, two (capped) sets with J ≥ t must share
+    an element inside their first |A′| − ⌈t·|A′|⌉ + 1 shingles — proof: the
+    pair needs |A′∩B′| ≥ t/(1+t)·(|A|+|B|) ≥ ⌈t·max(|A′|,|B′|)⌉ shared
+    shingles, and fewer than that many elements of either set lie OUTSIDE
+    its prefix. So the quadratic self-join runs over ~(1−t) of each set
+    and the surviving candidates are verified with an exact count.
 
     prefix = the |A′|−⌈t·|A′|⌉+1 smallest shingle hashes per doc (the
     global order is the xxhash64 value itself — uniform, deterministic).
@@ -211,30 +216,6 @@ def _prefix_verified_pairs(sh: DataFrame, sizes: DataFrame,
         .agg(F.count("*").alias("inter"))
     )
     return _score_pairs(inter, sizes, threshold)
-
-
-def ngram_jaccard_pairs_prefix(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", n: int = 3,
-                               threshold: float = 0.8,
-                               max_posting: int = 1000) -> DataFrame:
-    """Exact n-gram Jaccard with PREFIX-FILTERED candidate generation
-    (Bayardo/Ma/Srikant, "Scaling Up All Pairs Similarity Search", WWW
-    2007; Xiao et al. PPJoin) — bit-identical output to
-    :func:`ngram_jaccard_pairs`, built for the boilerplate-heavy regime
-    where postings run long and the all-postings self-join detonates.
-
-    Under any global shingle order, two (capped) sets with J ≥ t must share
-    an element inside their first |A′| − ⌈t·|A′|⌉ + 1 shingles — proof: the
-    pair needs |A′∩B′| ≥ t/(1+t)·(|A|+|B|) ≥ ⌈t·max(|A′|,|B′|)⌉ shared
-    shingles, and fewer than that many elements of either set lie OUTSIDE
-    its prefix. So the quadratic self-join runs over ~(1−t) of each set
-    (at t=0.8: 20% of postings → ~25× less pair work) and the surviving
-    candidates are verified with an exact full-intersection count.
-
-    Equivalent to ``ngram_jaccard_pairs(..., regime="prefix")``; use
-    ``regime="auto"`` to pick the regime from the corpus shape."""
-    return ngram_jaccard_pairs(df, text_col, id_col, n, threshold,
-                               max_posting, regime="prefix")
 
 
 def exact_dup_pairs(df: DataFrame, text_col: str = "text",
@@ -331,7 +312,7 @@ def dedup_clusters(pairs: DataFrame, docs: DataFrame,
                    id_col: str = "doc_id",
                    order_col: str | None = None) -> DataFrame:
     """Close the dedup loop: near-dup PAIRS (from any pair operator in this
-    module — Jaccard/MinHash/SimHash/cosine) → duplicate CLUSTERS → one
+    module — Jaccard/MinHash/cosine) → duplicate CLUSTERS → one
     deterministic keeper per cluster. Returns one row per INPUT doc:
     (id, keeper_id, cluster_size, is_keeper); docs in no pair form their own
     singleton cluster. Filtering to ``is_keeper`` is the "keep one copy"
@@ -626,113 +607,6 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                                          self_join=True)
 
 
-def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash (Charikar, "Similarity estimation techniques from
-    rounding algorithms", STOC 2002) per document via one Arrow pass (numpy bit votes: each
-    distinct token votes ±1 on its md5-derived bits; the signature is the
-    sign vector), plus 4×16-bit band columns for hamming-bucketed joins.
-
-    Empty-doc rule (r4 VERDICT "what's wrong" #1, explicit): a document
-    with NO tokens has no feature set to hash — zero votes would pin every
-    empty doc to signature 0 and make all empty docs pairwise hamming-0
-    "near-dups". Token-less documents therefore emit NO signature row (and
-    so no pairs), the same exclusion `_shingles`/`minhash_dedup_pairs`
-    apply to sub-n-token docs."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            toks = set((t or "").split())
-            if not toks:
-                out.append(None)
-                continue
-            votes = np.zeros(64, dtype=np.int64)
-            shifts = np.arange(64, dtype=np.uint64)
-            for tok in toks:
-                h = np.uint64(int.from_bytes(
-                    hashlib.md5(tok.encode()).digest()[:8], "big"))
-                bits = (h >> shifts) & np.uint64(1)
-                votes += np.where(bits == 1, 1, -1)
-            sig = int(((votes > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64))
-            out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-        return pd.Series(out, dtype="Int64")  # nullable: None = token-less doc
-
-    sig = df.select(F.col(id_col).alias("id"),
-                    simhash(F.col(text_col)).alias("simhash")) \
-            .filter(F.col("simhash").isNotNull())
-    for i in range(4):
-        sig = sig.withColumn(
-            f"band{i}",
-            F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)),
-        )
-    return sig
-
-
-def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs: candidates share a 16-bit band (pigeonhole: hamming ≤ 3
-    guarantees a shared band, so results are EXACT for max_hamming ≤ 3;
-    wider distances are best-effort recall), verified by exact popcount
-    hamming distance. At 100 TB each band join is a plain equi-shuffle on a
-    16-bit key; no all-pairs stage exists."""
-    sig = simhash_signatures(df, text_col, id_col)
-    pairs = None
-    for i in range(4):
-        a = sig.select(F.col("id").alias("id_a"), F.col("simhash").alias("h_a"),
-                       F.col(f"band{i}").alias("band"))
-        b = sig.select(F.col("id").alias("id_b"), F.col("simhash").alias("h_b"),
-                       F.col(f"band{i}").alias("band"))
-        p = a.join(b, "band").filter(F.col("id_a") < F.col("id_b")) \
-             .select("id_a", "id_b", "h_a", "h_b")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    return (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def embedding_cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               n_planes: int = 6, n_tables: int = 6,
-                               dim: int = 64) -> DataFrame:
-    """Embedding near-dup AT SCALE: hyperplane-LSH buckets → within-bucket
-    pairs → exact cosine verify. The join is an equi-shuffle on (table,
-    bucket) with |bucket|² pair work, never n² — the scale path for which
-    `embedding_cosine_pairs` is the exact baseline. Recall grows with
-    n_tables (high-cosine pairs land in a shared bucket in ≥1 table w.h.p.);
-    precision is exact because every candidate is cosine-verified."""
-    from .similarity import _bucket_col, _hyperplanes
-
-    vec = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
-    base = emb.select(F.col(id_col).alias("id"), vec.alias("v"),
-                      norm.alias("nrm"))
-    cand = None
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, t)
-        bucketed = base.withColumn("bucket", _bucket_col("v", planes)) \
-                       .withColumn("table", F.lit(t))
-        a = bucketed.select("table", "bucket", F.col("id").alias("id_a"),
-                            F.col("v").alias("va"), F.col("nrm").alias("na"))
-        b = bucketed.select("table", "bucket", F.col("id").alias("id_b"),
-                            F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-        p = a.join(b, ["table", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
-        cand = p if cand is None else cand.unionByName(p)
-    dot = F.aggregate(F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        cand.dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b",
-                F.round(dot / (F.col("na") * F.col("nb")) + 1e-9, 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding",
@@ -740,9 +614,8 @@ def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
     """Embedding near-dup: all pairs with cosine ≥ threshold.
 
     Brute-force O(n²) self-join — the exact BASELINE for recall tests and
-    small inputs only. **Prefer `embedding_cosine_pairs_lsh`** (bucketed
-    pair generation, exact cosine verify) or the ANN top-k in
-    operators/similarity.py for anything production-sized: at 100 TB a
+    small inputs only. **Prefer the ANN top-k** in operators/similarity.py
+    (IVF or PQ) for anything production-sized: at 100 TB a
     cartesian is a detonation, so this guard counts the input and refuses
     above ``max_rows`` (set ``max_rows=None`` only if you truly mean n²)."""
     if max_rows is not None:
@@ -751,9 +624,8 @@ def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
             raise ValueError(
                 f"embedding_cosine_pairs is an O(n²) crossJoin baseline; "
                 f"input has {n} rows > max_rows={max_rows}. Use "
-                f"embedding_cosine_pairs_lsh (bucketed, exact-verified) or "
-                f"similarity.topk_lsh at this scale, or pass a larger "
-                f"max_rows / max_rows=None to force the cartesian.")
+                f"similarity.topk_ivf or topk_pq at this scale, or pass a "
+                f"larger max_rows / max_rows=None to force the cartesian.")
     vec = F.col(vec_col).cast("array<double>")  # float64 for oracle parity
     norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
     v = emb.select(F.col(id_col).alias("id"), vec.alias("v"), norm.alias("nrm"))

@@ -13,7 +13,7 @@ loop, the driver owns the iteration count, every round's plan is flat.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -162,515 +162,6 @@ def triangle_count(triples: DataFrame, pred: str | None = None) -> DataFrame:
     tri = wedges.join(
         c, (F.col("x") == F.col("c.src")) & (F.col("z") == F.col("c.dst")))
     return tri.agg(F.count("*").alias("n_triangles"))
-
-
-def _triangles(und: DataFrame) -> DataFrame:
-    """(x, y, z) — every triangle of the canonical (u<v) undirected edge
-    set EXACTLY ONCE, via the degree-ordered orientation (see
-    triangle_count's docstring for the O(√m) wedge-fanout argument).
-    Shared by triangle_count (one agg) and k_truss (per-edge support)."""
-    deg = (und.select(F.explode(F.array("u", "v")).alias("node"))
-           .groupBy("node").agg(F.count("*").alias("deg")))
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    # orient by (degree, node) — a total order, so exactly one direction
-    lower_first = (F.col("du") < F.col("dv")) | \
-        ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    o = (und.join(du, "u").join(dv, "v")
-         .select(F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-                 F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst")))
-    a, b, c = o.alias("a"), o.alias("b"), o.alias("c")
-    wedges = (a.join(b, F.col("a.dst") == F.col("b.src"))
-              .select(F.col("a.src").alias("x"), F.col("a.dst").alias("y"),
-                      F.col("b.dst").alias("z")))
-    return wedges.join(
-        c, (F.col("x") == F.col("c.src")) & (F.col("z") == F.col("c.dst"))) \
-        .select("x", "y", "z")
-
-
-def k_truss(triples: DataFrame, k: int, max_iter: int = 100,
-            metrics: dict | None = None) -> DataFrame:
-    """Edges of the k-truss → (u, v, support): the maximal subgraph where
-    every edge participates in ≥ k−2 triangles (Cohen 2008, "Trusses:
-    cohesive subgraphs for social network analysis") — the edge-level
-    cohesion peel to k_core's node-level one; a planted K₅ survives the
-    5-truss while chains and stars dissolve. Support is reported within
-    the final truss.
-
-    Driver-fixpoint peeling: each round enumerates triangles over the
-    surviving edges with the degree-ordered O(√m) wedge join
-    (`_triangles`), drops edges under support, and re-checks — the
-    vocabulary-sized survivors checkpoint per round, the corpus-sized
-    original edge set is read once into the first round's lazy plan.
-
-    Full re-enumeration per round is the DELIBERATE shape here (contrast
-    k_core's delta peel, r5 VERDICT next-round #7): a delta-support
-    update must find all triangles CONTAINING a dropped edge, which is
-    itself a wedge join of the dropped set against the survivors — the
-    same O(√m)-bounded join as re-enumeration, saved work only when the
-    drop set is much smaller than the edge set. Measured peel depth on
-    the parity fixtures is 2-4 rounds (dense cores either survive intact
-    or dissolve in one cascade; `metrics` records `rounds` and per-round
-    drops so a pathological corpus is observable), so the constant-factor
-    saving of delta-support does not buy its complexity. Revisit if a
-    real corpus shows deep truss cascades."""
-    if metrics is not None:
-        metrics.update({"rounds": 0, "dropped_per_round": []})
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")  # ADVICE r5: k > 2 with
-        # a non-positive cap otherwise hit `keep` before first binding
-    cur = (triples.select(F.least("subj", "obj").alias("u"),
-                          F.greatest("subj", "obj").alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct().localCheckpoint(eager=True))
-    need = k - 2
-    if need == 0:
-        # every edge is trivially a 2-truss; report its (unpeeled) support
-        tri = _triangles(cur)
-        support = (tri.select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
-                   .unionAll(tri.select(F.least("y", "z").alias("u"), F.greatest("y", "z").alias("v")))
-                   .unionAll(tri.select(F.least("x", "z").alias("u"), F.greatest("x", "z").alias("v")))
-                   .groupBy("u", "v").agg(F.count("*").alias("support")))
-        return (cur.join(support, ["u", "v"], "left")
-                .select("u", "v", F.coalesce("support", F.lit(0)).alias("support")))
-    for _ in range(max_iter):
-        tri = _triangles(cur)
-        # each triangle supports its three edges; x/y/z carry the
-        # degree-orientation's order, so every projection re-canonicalizes
-        # to u<v before counting
-        edges_of = [
-            tri.select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")),
-            tri.select(F.least("y", "z").alias("u"), F.greatest("y", "z").alias("v")),
-            tri.select(F.least("x", "z").alias("u"), F.greatest("x", "z").alias("v")),
-        ]
-        support = (edges_of[0].unionAll(edges_of[1]).unionAll(edges_of[2])
-                   .groupBy("u", "v").agg(F.count("*").alias("support")))
-        keep = support.filter(F.col("support") >= need) \
-            .localCheckpoint(eager=True)
-        n_dropped = cur.count() - keep.count()
-        cur = keep.select("u", "v").localCheckpoint(eager=True)
-        if metrics is not None:
-            metrics["rounds"] += 1
-            metrics["dropped_per_round"].append(n_dropped)
-        if n_dropped == 0:
-            return keep
-    return keep  # max_iter cap: conservative (possibly un-peeled) truss
-
-
-def personalized_pagerank(triples: DataFrame, seeds: list[str],
-                          iterations: int = 10,
-                          damping: float = 0.85) -> DataFrame:
-    """PageRank personalized to a SEED entity set → (node, rank), ranks
-    summing to ~1.0: the random walk teleports back to the seeds (not
-    uniformly), so rank measures importance RELATIVE to the seeds — the
-    standard "what matters around these entities" query for entity
-    resolution, related-symbol recommendation, and seed-expansion labeling
-    (Page et al. 1999 §6 'personalized' vector; Jeh & Widom 2003).
-
-    Same iteration scaffold and scale shape as :func:`pagerank` (edges
-    persist()ed at natural partitioning; vocabulary-sized rank state
-    checkpointed per round; dangling mass — here returned to the seeds —
-    is one scalar agg per round). Seeds absent from the graph's node set
-    are ignored (the shortest_paths convention); an entirely-absent seed
-    list raises, since a teleport distribution needs at least one live
-    seed."""
-    edges = triples.select("subj", "obj").distinct().persist()
-    try:
-        nodes = edges.select(F.col("subj").alias("node")).union(
-            edges.select(F.col("obj").alias("node"))).distinct()
-        nodes = nodes.localCheckpoint(eager=True)
-        spark = triples.sparkSession
-        seed_df = spark.createDataFrame([(s,) for s in seeds],
-                                        "node string") \
-            .join(nodes, "node", "left_semi").distinct() \
-            .localCheckpoint(eager=True)
-        n_seeds = seed_df.count()
-        if n_seeds == 0:
-            raise ValueError("personalized_pagerank: no seed exists in the "
-                             "graph's node set")
-        seed_w = 1.0 / n_seeds
-        is_seed = F.when(F.col("_s").isNotNull(), F.lit(seed_w)) \
-            .otherwise(F.lit(0.0))
-
-        out_deg = edges.groupBy("subj").agg(F.count("*").alias("deg"))
-        ranks = (nodes.join(seed_df.withColumn("_s", F.lit(1)), "node", "left")
-                 .select("node", is_seed.alias("rank")))
-        for _ in range(iterations):
-            contribs = (
-                edges.join(out_deg, "subj")
-                .join(ranks, edges.subj == ranks.node)
-                .select(F.col("obj").alias("node"),
-                        (F.col("rank") / F.col("deg")).alias("contrib"))
-                .groupBy("node")
-                .agg(F.sum("contrib").alias("inflow")))
-            flowing = ranks.join(out_deg, ranks.node == out_deg.subj,
-                                 "left_semi")
-            dangling = 1.0 - (flowing.agg(F.sum("rank")).collect()[0][0]
-                              or 0.0)
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .join(seed_df.withColumn("_s", F.lit(1)), "node", "left")
-                .select(
-                    "node",
-                    (is_seed * F.lit(1 - damping)
-                     + F.lit(damping)
-                     * (F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + is_seed * F.lit(float(dangling))))
-                    .alias("rank"))
-                .localCheckpoint(eager=True))
-        return ranks.select("node", F.round(F.col("rank"), 6).alias("rank"))
-    finally:
-        edges.unpersist()
-
-
-def label_propagation(triples: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Community detection via DETERMINISTIC synchronous label propagation
-    (Raghavan/Albert/Kumara 2007, made order-independent) → (node, label):
-    labels init to the node's own id; each round every node adopts the
-    label with the highest count among its neighbors PLUS itself, ties
-    broken by the smallest label. The self-vote damps the 2-cycle
-    oscillation synchronous LPA is known for; min-label tie-breaks make
-    the fixpoint a pure function of the graph (classic LPA breaks ties
-    randomly and is run-to-run unstable — useless for a resumable
-    pipeline). Communities are finer than connected components: two
-    cliques joined by one bridge edge share a component but keep
-    distinct labels.
-
-    Scale shape: the symmetric edge set persists at natural partitioning
-    (_edge_set); each round is one edges⋈labels join + a (node, label)
-    count + a per-node argmax window — all label-relation-sized; the
-    vocabulary-sized label state checkpoints per round and the loop ends
-    at the no-change fixpoint (or max_iter, the LPA standard since
-    convergence is not guaranteed in pathological graphs). Self-loops are
-    dropped (the k_core/k_truss convention — a loop would double a
-    node's self-weight and bias it against adopting its community)."""
-    base = _edge_set(triples, undirected=True)
-    edges = base.filter(F.col("src") != F.col("dst"))
-    spark = triples.sparkSession
-    p = max(spark.sparkContext.defaultParallelism // 4, 1)
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .coalesce(p).localCheckpoint(eager=True))
-    try:
-        for _ in range(max_iter):
-            votes = (edges
-                     .join(labels.withColumnRenamed("node", "dst")
-                           .withColumnRenamed("label", "nbr_label"), "dst")
-                     .select(F.col("src").alias("node"),
-                             F.col("nbr_label").alias("label"))
-                     .unionAll(labels)          # self-vote (damping)
-                     .groupBy("node", "label")
-                     .agg(F.count("*").alias("n")))
-            w = Window.partitionBy("node").orderBy(F.desc("n"), "label")
-            new = (votes.withColumn("rk", F.row_number().over(w))
-                   .filter(F.col("rk") == 1).select("node", "label")
-                   .coalesce(p).localCheckpoint(eager=True))
-            changed = (new.join(labels.withColumnRenamed("label", "old"),
-                                "node")
-                       .filter(F.col("label") != F.col("old")).count())
-            labels = new
-            if changed == 0:
-                return labels
-        return labels  # max_iter cap: a valid (possibly unconverged) labeling
-    finally:
-        base.unpersist()
-
-
-def _edge_set(triples: DataFrame, undirected: bool = False) -> DataFrame:
-    """Distinct (src, dst) edge relation for the iterative graph ops,
-    persist()ed at NATURAL partitioning — no coalesce, no localCheckpoint.
-    Edges are corpus-sized (distinct subj→obj over all triples): pinning
-    them to parallelism/4 partitions (the r4 formulation) serialized every
-    per-round frontier join through a few fat row-format partitions at
-    scale (r4 VERDICT what's-wrong #2). Columnar persist keeps them
-    prunable and lets AQE size each round's join from runtime stats; the
-    coalesce discipline is reserved for the genuinely small
-    frontier/state. Caller unpersists."""
-    edges = triples.select(F.col("subj").alias("src"),
-                           F.col("obj").alias("dst")).distinct()
-    if undirected:
-        edges = edges.union(
-            edges.select(F.col("dst").alias("src"),
-                         F.col("src").alias("dst"))).distinct()
-    return edges.persist()
-
-
-def shortest_paths(triples: DataFrame, landmarks: list[str],
-                   max_iter: int = 20, undirected: bool = False) -> DataFrame:
-    """Hop distance from every reachable node TO each landmark following
-    edge direction (GraphFrames' shortestPaths analogue) → (node, landmark,
-    distance). Unreachable (node, landmark) pairs emit no row.
-
-    FRONTIER-based BFS, not full relaxation: each round joins only the
-    newly-discovered frontier against the edge set, anti-joins out nodes
-    already labeled, and checkpoints — so per-round shuffle volume is
-    frontier-sized, state grows monotonically, and the loop ends when the
-    frontier empties (≤ diameter rounds, the CC discipline of
-    operators/cc.py). Landmark count is the small multiplier: state is
-    O(nodes × |landmarks|).
-
-    Scale shape (r4 VERDICT what's-wrong #2): the edge set is CORPUS-sized
-    — it stays persist()ed at natural partitioning (columnar, AQE plans
-    each round's join from its real size). Only the genuinely small
-    frontier/state frames get the coalesce-to-few-tasks + localCheckpoint
-    treatment (the microVM task-floor rationale applies to THEM, not to
-    the biggest relation in the op). A landmark absent from the graph's
-    node set seeds nothing (GraphFrames' shortestPaths semantics: a
-    non-existent vertex yields no rows — ADVICE r4)."""
-    edges = _edge_set(triples, undirected)
-    spark = triples.sparkSession
-    p = max(spark.sparkContext.defaultParallelism // 4, 1)
-
-    seeds = spark.createDataFrame(
-        [(lm, lm, 0) for lm in landmarks],
-        "node string, landmark string, distance int")
-    node_set = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))).distinct()
-    state = seeds.join(node_set, "node", "left_semi") \
-        .coalesce(1).localCheckpoint(eager=True)
-    frontier = state
-    try:
-        for _ in range(max_iter):
-            # predecessors of the frontier are one hop farther from the landmark
-            cand = (edges.join(frontier.withColumnRenamed("node", "dst"), "dst")
-                    .select(F.col("src").alias("node"), "landmark",
-                            (F.col("distance") + 1).alias("distance"))
-                    .groupBy("node", "landmark")
-                    .agg(F.min("distance").alias("distance")))
-            new = cand.join(state.select("node", "landmark"),
-                            ["node", "landmark"], "left_anti")
-            new = new.coalesce(p).localCheckpoint(eager=True)
-            if new.count() == 0:
-                return state
-            state = state.unionByName(new).coalesce(p).localCheckpoint(eager=True)
-            frontier = new
-        return state  # max_iter cap: distances beyond it are absent, not wrong
-    finally:
-        edges.unpersist()  # state rounds are checkpointed — safe to release
-
-
-def k_core(triples: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
-    """Nodes of the k-core of the UNDIRECTED edge set → (node, degree),
-    degree measured WITHIN the final core. The k-core is the maximal
-    subgraph where every node keeps ≥ k neighbors — the standard
-    dense-region extractor (Seidman 1983, "Network structure and minimum
-    degree"): hub/community detection on call graphs, spam-ring mining on
-    link graphs.
-
-    DELTA peeling as a driver fixpoint (r5 VERDICT next-round #7 — the r5
-    formulation recomputed ALL degrees over the surviving subgraph every
-    round, one full edge-stream shuffle per peel round): degrees are
-    computed ONCE, then each round only decrements survivors adjacent to
-    the just-dropped node set D. The invariant that makes the pure-delta
-    update exact: an edge (u, v) with v ∈ D and u still alive was
-    necessarily present in the current subgraph (edges to earlier-dropped
-    nodes were decremented in their round; both-endpoints-in-D edges only
-    touch dead nodes, which the alive-side join discards). Per-round cost
-    is O(edges incident to D) + O(alive) instead of O(edges) — D shrinks
-    fast after the first round, so late rounds are near-free.
-
-    Scale shape: the corpus-sized edge set stays persist()ed at natural
-    partitioning (never coalesced — the _edge_set lesson); D is
-    checkpointed so AQE sizes each probe join from its REAL cardinality —
-    broadcast for the typical post-first-round trickle, shuffle when the
-    first round drops half a power-law graph (a forced broadcast hint
-    would OOM exactly there). Only the vocabulary-sized degree/drop state
-    is checkpointed per round."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    base = (triples.select(F.least("subj", "obj").alias("u"),
-                           F.greatest("subj", "obj").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct().persist())
-    try:
-        deg = (base.select(F.explode(F.array("u", "v")).alias("node"))
-               .groupBy("node").agg(F.count("*").alias("degree")))
-        alive = deg.filter(F.col("degree") >= k).localCheckpoint(eager=True)
-        dropped = deg.filter(F.col("degree") < k).select("node") \
-            .localCheckpoint(eager=True)
-        for _ in range(max_iter):
-            if dropped.count() == 0:
-                return alive
-            dec = (base.join(dropped.withColumnRenamed("node", "v"), "v")
-                   .select(F.col("u").alias("node"))
-                   .unionAll(
-                       base.join(dropped.withColumnRenamed("node", "u"), "u")
-                       .select(F.col("v").alias("node")))
-                   .groupBy("node").agg(F.count("*").alias("dec")))
-            deg2 = (alive.join(dec, "node", "left")
-                    .select("node", (F.col("degree") -
-                                     F.coalesce("dec", F.lit(0)))
-                            .alias("degree")))
-            alive = deg2.filter(F.col("degree") >= k) \
-                .localCheckpoint(eager=True)
-            dropped = deg2.filter(F.col("degree") < k).select("node") \
-                .localCheckpoint(eager=True)
-        return alive  # max_iter cap: conservative (possibly un-peeled) core
-    finally:
-        base.unpersist()
-
-
-def _hyperanf_init(triples: DataFrame, p: int, undirected: bool):
-    """Shared HyperANF setup: (edges, initial per-vertex register state,
-    round parallelism). Each vertex starts as the HLL sketch of {itself}
-    — one (node, bucket, rho) row."""
-    from .sketches import _rho_col
-
-    edges = _edge_set(triples, undirected)
-    spark = triples.sparkSession
-    par = max(spark.sparkContext.defaultParallelism // 4, 1)
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct())
-    h = F.xxhash64(F.col("node"), F.lit("hyperanf_v1"))
-    state = nodes.select(
-        "node",
-        F.shiftrightunsigned(h, 64 - p).cast("int").alias("bucket"),
-        _rho_col(h, p).alias("rho")).localCheckpoint(eager=True)
-    return edges, state, par
-
-
-def _hyperanf_round(edges: DataFrame, state: DataFrame,
-                    par: int) -> DataFrame:
-    """One ball-growing round: neighbors' registers ride the edge join,
-    HLL union = groupBy max. Idempotent, partitioning-invariant,
-    checkpointed (the cc.py discipline)."""
-    nbr = (edges.join(state.withColumnRenamed("node", "dst"), "dst")
-           .select(F.col("src").alias("node"), "bucket", "rho"))
-    return (state.unionByName(nbr)
-            .groupBy("node", "bucket").agg(F.max("rho").alias("rho"))
-            .coalesce(par).localCheckpoint(eager=True))
-
-
-def _per_node_ball_est(st: DataFrame, p: int) -> DataFrame:
-    """(node, est) — per-vertex HLL estimates computed IN COLUMNS (the
-    sketches.hll_estimate arithmetic, linear-counting branch included);
-    nothing per-node ever reaches the driver."""
-    m = 1 << p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    agg = st.groupBy("node").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s"),
-        F.count("*").alias("nrows"))
-    raw = alpha * m * m / (F.col("s") + (m - F.col("nrows")))
-    lin = m * F.log(F.lit(float(m)) / (m - F.col("nrows")))
-    est = F.when((raw <= 2.5 * m) & (F.col("nrows") < m), lin) \
-        .otherwise(raw)
-    return agg.select("node", est.alias("est"))
-
-
-def neighborhood_function(triples: DataFrame, t_max: int = 8, p: int = 8,
-                          undirected: bool = True,
-                          rel_tol: float = 1e-3) -> DataFrame:
-    """HyperANF (Boldi, Rosa & Vigna, "HyperANF: Approximating the
-    Neighbourhood Function of Very Large Graphs on a Budget", WWW 2011):
-    → (t, nf_est) for t = 0..≤t_max, where nf(t) ≈ Σ_u |B(u, t)| — the
-    number of (ordered) pairs within distance t, self included. The
-    distance-distribution summary (and, via :func:`effective_diameter`,
-    the classic small-world statistic) of a graph too large for exact
-    all-pairs BFS.
-
-    Each vertex carries a 2^p-register HLL sketch of its ball — the
-    mergeable register-table encoding of operators/sketches.py, one
-    (node, bucket, rho) row per occupied register. A round is pure
-    DataFrame algebra: neighbors' registers ride the edge join, then one
-    groupBy(node, bucket) max — HLL union IS max, which also makes every
-    round idempotent and partitioning-invariant. Per-node estimates (the
-    sketches.hll_estimate arithmetic, linear-counting branch included)
-    are computed IN COLUMNS by a groupBy(node) — only the per-round nf
-    scalar reaches the driver. Stops early when nf grows by < ``rel_tol``
-    (the ball system saturated ≈ at the diameter).
-
-    Scale shape: per-round shuffle is O(edges × avg occupied registers)
-    — p trades accuracy (1.04/√2^p) against that multiplier; sketches,
-    not node sets, are what make t_max rounds affordable where exact
-    frontier BFS from EVERY vertex would square. State is checkpointed
-    per round (the cc.py discipline)."""
-    edges, state, par = _hyperanf_init(triples, p, undirected)
-    spark = triples.sparkSession
-
-    def _nf(st: DataFrame) -> float:
-        return float(_per_node_ball_est(st, p)
-                     .agg(F.sum("est")).collect()[0][0])
-
-    out = [(0, round(_nf(state), 1))]
-    try:
-        for t in range(1, t_max + 1):
-            state = _hyperanf_round(edges, state, par)
-            nf_t = round(_nf(state), 1)
-            out.append((t, nf_t))
-            if nf_t <= out[-2][1] * (1 + rel_tol):
-                break
-        return spark.createDataFrame(out, "t int, nf_est double")
-    finally:
-        edges.unpersist()
-
-
-def effective_diameter(nf: DataFrame, q: float = 0.9) -> float:
-    """The q-effective diameter from a neighborhood_function table: the
-    (linearly interpolated) smallest t at which nf(t) reaches q · nf(last)
-    — HyperANF's headline statistic. Driver arithmetic on the ≤t_max-row
-    result."""
-    rows = sorted((r.t, r.nf_est) for r in nf.collect())
-    target = q * rows[-1][1]
-    prev_t, prev_v = rows[0]
-    if prev_v >= target:
-        return float(prev_t)
-    for t, v in rows[1:]:
-        if v >= target:
-            if v == prev_v:
-                return float(t)
-            return prev_t + (target - prev_v) / (v - prev_v)
-        prev_t, prev_v = t, v
-    return float(rows[-1][0])
-
-
-def harmonic_centrality_approx(triples: DataFrame, t_max: int = 8,
-                               p: int = 10,
-                               undirected: bool = True) -> DataFrame:
-    """→ (node, centrality) — approximate harmonic centrality
-    H(u) = Σ_{v≠u} 1/d(u, v), the distance-based importance measure that
-    (unlike closeness) is well-defined on disconnected graphs (Boldi &
-    Vigna, "Axioms for Centrality", Internet Math. 2014 — computed there
-    exactly via the same HyperBall machinery used here). Estimated from
-    HyperANF ball sketches: H(u) ≈ Σ_t (|B(u,t)| − |B(u,t−1)|) / t.
-
-    Same round shape as :func:`neighborhood_function` (edge join +
-    groupBy-max register union, per-node estimates in Columns), plus one
-    slim (node, est) join per round to accumulate the telescoping sum;
-    estimator jitter can make a per-round delta slightly negative, which
-    is clamped at 0 (ball sizes are monotone by construction). Stops
-    early when no node's ball grew (sum of deltas = 0)."""
-    edges, state, par = _hyperanf_init(triples, p, undirected)
-
-    prev = _per_node_ball_est(state, p).coalesce(par) \
-        .localCheckpoint(eager=True)
-    hc = prev.select("node", F.lit(0.0).alias("centrality")) \
-        .coalesce(par).localCheckpoint(eager=True)
-    try:
-        for t in range(1, t_max + 1):
-            state = _hyperanf_round(edges, state, par)
-            cur = _per_node_ball_est(state, p).coalesce(par) \
-                .localCheckpoint(eager=True)
-            delta = (cur.join(prev.withColumnRenamed("est", "prev_est"),
-                              "node")
-                     .select("node",
-                             F.greatest(F.col("est") - F.col("prev_est"),
-                                        F.lit(0.0)).alias("d")))
-            grew = delta.agg(F.sum("d")).collect()[0][0] or 0.0
-            hc = (hc.join(delta, "node")
-                  .select("node",
-                          (F.col("centrality") + F.col("d") / t)
-                          .alias("centrality"))
-                  .coalesce(par).localCheckpoint(eager=True))
-            prev = cur
-            if grew <= 0.0:
-                break
-        return hc.select("node",
-                         F.round(F.col("centrality") + 1e-9, 4)
-                         .alias("centrality"))
-    finally:
-        edges.unpersist()
 
 
 def edge_pmi(edges: DataFrame, src_col: str = "src",

@@ -1,26 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video are `binary` columns with a metadata struct; decode /
-feature-extract run as Arrow-batched `mapInPandas` stages. The decode
-itself is STUBBED (no image/audio libraries in this container — analogue of
-the reference returning rc 4 when an engine's backend is missing,
-core.py:383-392): `decode_stub=True` produces a deterministic fake feature
-vector from the bytes, `decode_stub=False` raises NotImplementedError at
-the exact point a real decoder (PIL/ffmpeg/torchaudio) would plug in.
-
-The Spark-side plumbing — schema, batch shape, partitioning, pruned
-passthrough of the payload — is real and tested: at 100 TB the payload
-column must never be shuffled (features are extracted scan-side, payload
-dropped immediately), which is exactly what this stage does.
+Images/audio/video are `binary` columns with a metadata struct. The
+sandbox has no image/audio bytes, so `documents_as_media` stands document
+text in for the payload; the metadata is derived scan-side from pure
+expressions, so the payload column is never shuffled.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,9 +15,6 @@ MEDIA_SCHEMA = (
     "media_id long, media_type string, payload binary, "
     "meta struct<width:int, height:int, n_bytes:long>"
 )
-
-FEATURE_DIM = 8
-
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: treat document text bytes as an opaque payload (the sandbox
@@ -46,53 +30,4 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
             F.pmod(F.xxhash64("doc_id", "doc_id"), F.lit(1080)).cast("int").alias("height"),
             F.length(payload).cast("long").alias("n_bytes"),
         ).alias("meta"),
-    )
-
-
-def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """payload → fixed-dim feature vector; payload column DROPPED on output.
-
-    Batch shape: Arrow record batches in, (media_id, media_type, meta,
-    feature array<double>) out — the signature a real decoder would keep.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real media decode requires PIL/ffmpeg — not in this "
-                    "container; pass decode_stub=True for the deterministic fake"
-                )
-            feats = []
-            for payload in pdf["payload"]:
-                raw = bytes(payload or b"")
-                # deterministic fake: FEATURE_DIM doubles from the digest
-                d = hashlib.blake2b(raw, digest_size=FEATURE_DIM * 8).digest()
-                v = np.frombuffer(d, dtype="<u8").astype("float64")
-                feats.append((v / np.float64(1 << 64)).round(6).tolist())
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "meta": pdf["meta"],
-                "feature": feats,
-            })
-
-    out_schema = ("media_id long, media_type string, "
-                  "meta struct<width:int, height:int, n_bytes:long>, "
-                  "feature array<double>")
-    return media.mapInPandas(run, schema=out_schema)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video-style frame sampling plumbing: explode a frame index sequence
-    from metadata (pure exprs — the decode of each frame would live in
-    extract_features). Deterministic, shuffle-free."""
-    # explicit floor: Spark's cast('int') truncates while DuckDB's CAST
-    # rounds — both sides of the oracle pair must floor (ADVICE r1)
-    n_frames = F.floor(F.col("meta.n_bytes") / F.lit(100)).cast("int")
-    return media.select(
-        "media_id", "media_type",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
     )

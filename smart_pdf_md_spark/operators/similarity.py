@@ -1,15 +1,15 @@
 """Similarity search over an embedding column (`array<float>`).
 
-Two paths, same result shape (query_id, neighbor_id, cosine, rank):
+Three paths, same result shape (query_id, neighbor_id, cosine, rank):
 
 - brute-force top-k — the exact baseline: broadcast the (small) query set,
   score every corpus vector with pure Column exprs (zip_with dot product —
   JVM-side, codegen'd), window top-k per query. At 100 TB: one scan, no
   shuffle except the final per-query top-k (tiny).
-- LSH-bucketed (random hyperplanes) — the approximate scale path: sign-bit
-  bucket both sides, join on bucket, score only in-bucket. Probing P
-  hyperplane tables bounds recall loss; the candidate join is |bucket|²
-  not n². Deterministic: hyperplanes are seeded.
+- IVF — the approximate scale path: score only the vectors in each
+  query's nprobe nearest k-means lists (an equi-join on list_id).
+- PQ — asymmetric distance over m-byte codes, so the raw vectors are never
+  read at query time.
 """
 
 from __future__ import annotations
@@ -18,9 +18,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-_DIM_SEED = 42
-
 
 def _cosine(a, b) -> object:
     # compute in float64 regardless of storage type (float32 parquet) so the
@@ -55,69 +52,8 @@ def topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
             .filter(F.col("rank") <= k))
 
 
-def _hyperplanes(dim: int, n_planes: int, table: int) -> np.ndarray:
-    rng = np.random.RandomState(_DIM_SEED + table)
-    return rng.normal(size=(n_planes, dim)).astype("float64")
-
-
-def _bucket_col(vec_col: str, planes: np.ndarray):
-    """sign-bit bucket id as a Column expr: bit i = (v·plane_i) > 0.
-    Planes enter the plan as array literals — no UDF, no broadcast var."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(F.zip_with(F.col(vec_col), plane, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        bits.append(F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket
-
-
-def topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             n_planes: int = 8, n_tables: int = 4, dim: int = 64) -> DataFrame:
-    """Approximate top-k: candidates = union over hash tables of same-bucket
-    vectors, then exact cosine + window top-k on the candidate set."""
-    cand = None
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, t)
-        c = emb.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("nv"),
-                       _bucket_col(vec_col, planes).alias("bucket"))
-        q = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qv"),
-                           _bucket_col(vec_col, planes).alias("bucket"))
-        p = c.join(F.broadcast(q), "bucket").filter(
-            F.col("neighbor_id") != F.col("query_id"))
-        p = p.select("query_id", "neighbor_id", "qv", "nv")
-        cand = p if cand is None else cand.unionByName(p)
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.select(
-        "query_id", "neighbor_id",
-        F.round(_cosine(F.col("qv"), F.col("nv")) + 1e-9, 4).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    """recall@k of the approximate result vs the exact baseline, per query."""
-    e = exact.select("query_id", "neighbor_id")
-    a = approx.select("query_id", F.col("neighbor_id").alias("got"))
-    hit = e.join(a, (e.query_id == a.query_id) & (e.neighbor_id == a.got)) \
-           .groupBy(e.query_id).agg(F.count("*").alias("hits"))
-    tot = e.groupBy("query_id").agg(F.count("*").alias("total"))
-    return (tot.join(hit, "query_id", "left")
-            .select("query_id",
-                    F.round(F.coalesce(F.col("hits"), F.lit(0)) /
-                            F.col("total"), 4).alias("recall")))
-
-
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) index — the classic ANN scale path next to LSH
+# IVF (inverted-file) index — the classic ANN scale path
 # (cf. Jégou/Douze/Schmid, "Product Quantization for Nearest Neighbor
 # Search", TPAMI 2011 §III: IVF coarse quantizer without the PQ refinement).
 # Train a small k-means codebook, partition vectors into n_lists inverted
@@ -126,9 +62,6 @@ def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
 # literals, so assignment/search stay in whole-stage codegen — no UDF, no
 # broadcast variable, and the candidate join is an equi-join on list_id.
 # ---------------------------------------------------------------------------
-
-_IVF_SEED = 42
-
 
 def _sqdist_to_lists(vec_col: str, centroids: np.ndarray):
     """array<double> of squared distances from `vec_col` to every centroid
@@ -202,7 +135,7 @@ def topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
              dim: int = 64, centroids: np.ndarray | None = None) -> DataFrame:
     """Approximate top-k via IVF: score only vectors in each query's nprobe
-    nearest lists. Same output shape as topk_bruteforce/topk_lsh
+    nearest lists. Same output shape as topk_bruteforce
     (query_id, neighbor_id, cosine, rank). Candidate work is
     sum(|probed lists|) per query, never n; the join is an equi-join on
     list_id with the (tiny) query-probe table broadcast."""
@@ -298,7 +231,7 @@ def topk_pq(emb: DataFrame, queries: DataFrame, k: int = 5,
     time. Score = estimated cosine q·x̂/(‖q‖·‖x̂‖) with x̂ the codebook
     reconstruction; same output shape as the other ANN paths
     (query_id, neighbor_id, cosine, rank), with `cosine` the ADC
-    ESTIMATE (recall-gated in tests, like LSH/IVF).
+    ESTIMATE (recall-gated in tests, like IVF).
 
     Scale shape: the scan side reads only (id, code) — m bytes/vector;
     queries broadcast (tiny); the only shuffle is the per-query top-k

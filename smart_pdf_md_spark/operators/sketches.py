@@ -3,8 +3,8 @@ frequency estimation whose STATE is a small table you can commit, read
 back, and merge across runs (the property `approx_count_distinct` cannot
 give you: its sketch lives inside one aggregation and dies with the job).
 
-Why this matters at 100 TB: an incremental pipeline (curate_append,
-streaming appends) wants "distinct tokens/urls/shas seen so far" without
+Why this matters at 100 TB: an incremental pipeline (curate_append)
+wants "distinct tokens/urls/shas seen so far" without
 re-reading history. A register table is a few KB; merging a new batch is
 one groupBy-max over (old ∪ batch); the estimate is one agg. All pure
 Column expressions over xxhash64 — no UDF, deterministic at any
@@ -159,7 +159,7 @@ def cms_query(table: DataFrame, keys: DataFrame,
 # Bloom filter — mergeable set-membership sketch (Bloom, CACM 1970).
 # State = (block, bits) rows: m_bits packed 64 per BIGINT block, only
 # non-zero blocks stored. Merge = groupBy(block) bit_or — idempotent and
-# commutative, so the curate_append/streaming commit discipline applies
+# commutative, so the curate_append commit discipline applies
 # unchanged (re-merging a batch moves nothing). One-sided like CMS:
 # membership answers are "definitely not present" or "maybe present"
 # (false-positive rate ~ (1 - e^{-k·n/m})^k) — the right direction for
@@ -338,7 +338,7 @@ def bottomk_merge(k: int, *samples: DataFrame) -> DataFrame:
     corpus bottom-k as long as every shard kept its own bottom-k (the
     KMV merge property). Inputs dedupe first — KMV is an order statistic
     of the row SET, so merging overlapping shards (or replaying the same
-    batch, the streaming case) is idempotent; the union is k-bounded per
+    batch) is idempotent; the union is k-bounded per
     input, so the distinct is sketch-sized."""
     out = samples[0]
     for s in samples[1:]:

@@ -19,22 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_count(df: DataFrame, key: str, salt_cols: list[str],
-                 n_salts: int = 16) -> DataFrame:
-    """groupBy(key).count() with a salted two-phase aggregation.
-
-    Result is identical to the unsalted aggregate (the SQL oracle is plain
-    GROUP BY) — the salt only changes the shuffle layout.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(n_salts))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(F.count("*").alias("_partial_n"))
-    )
-    return partial.groupBy(key).agg(F.sum("_partial_n").alias("n"))
-
-
 def salted_agg(df: DataFrame, key: str, value: str, salt_cols: list[str],
                n_salts: int = 16) -> DataFrame:
     """Two-phase sum/count/min/max over a skewed key (avg derived exactly)."""

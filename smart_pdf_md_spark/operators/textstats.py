@@ -16,7 +16,7 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# tiny English stopword profile for the n-gram/stopword language heuristic
+# tiny English stopword profile (the stopword-ratio quality signal)
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
 
 
@@ -125,25 +125,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     + stopword ratio (each in [0,1], weighted 0.4/0.3/0.3, rounded)."""
     cols = quality_cols(F.col(text_col))
     return df.select("doc_id", *[v.alias(k) for k, v in cols.items()])
-
-
-def lang_id(df: DataFrame, text_col: str = "text",
-            threshold: float = 0.15) -> DataFrame:
-    """Stopword-profile language heuristic: English iff the EN-stopword token
-    ratio clears the threshold. (A real system plugs in per-lang char-ngram
-    profiles; the operator shape — pure scan-side scoring — is the point.)"""
-    toks = tokens_col(F.col(text_col))
-    n_tok = F.size(toks)
-    ratio = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        F.size(F.filter(toks, lambda t: F.lower(t).isin(*EN_STOPWORDS)))
-        / n_tok.cast("double")
-    )
-    return df.select(
-        "doc_id",
-        F.col("lang").alias("lang_declared"),
-        F.round(ratio + 1e-9, 4).alias("en_ratio"),
-        F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("other")).alias("lang_pred"),
-    )
 
 
 def chunk_documents(df: DataFrame, text_col: str = "text",
@@ -549,54 +530,6 @@ def adaptive_quality_filter(df: DataFrame, frac: float = 0.8,
             .filter(F.col("q_rank") <= frac))
 
 
-def adaptive_quality_filter_sketch(df: DataFrame, frac: float = 0.8,
-                                   by: str = "lang",
-                                   text_col: str = "text",
-                                   k: int = 64) -> DataFrame:
-    """:func:`adaptive_quality_filter` for the 100 TB regime — SAME
-    contract (keep the top ``frac`` of every stratum by quality) without
-    the exact form's per-stratum percent_rank SORT of the whole corpus
-    (a single-key sort per giant language). Instead: one map-side-
-    combinable log-histogram agg per stratum (≤ k·64+1 buckets — the
-    sketches.log_histogram bucketing), a histogram-sized window walk to
-    the per-stratum cut bucket, and a broadcast join + stream filter.
-    Two corpus scans, zero corpus sorts, and the histogram state is
-    committable/mergeable for incremental callers.
-
-    Approximation is BUCKET-granular: the whole cut bucket is kept, so
-    the kept fraction lands in [frac, frac + cut-bucket mass] and the
-    effective quality threshold is within relative 2^(1/k) − 1 of the
-    exact cut (~1.1% at the default k=64). Dominance is preserved
-    exactly at bucket granularity: no kept doc scores below a dropped
-    doc of the same stratum by more than one bucket. Emits ``quality``
-    and the stratum's ``q_cut`` (kept iff quality ≥ q_cut, bucket lower
-    edge) for audit."""
-    if not 0.0 < frac <= 1.0:
-        raise ValueError("frac must be in (0, 1]")
-    from .sketches import _LOG_MIN_BUCKET
-
-    q = quality_cols(F.col(text_col))["quality"]
-    scored = df.withColumn("quality", q)
-    bucket = F.when(F.col("quality") <= 0, F.lit(_LOG_MIN_BUCKET)) \
-        .otherwise(F.floor(F.lit(k) * F.log2("quality")).cast("long"))
-    scored = scored.withColumn("_b", bucket)
-    hist = scored.groupBy(by, "_b").agg(F.count("*").alias("_cnt"))
-    w_desc = (Window.partitionBy(by).orderBy(F.desc("_b"))
-              .rowsBetween(Window.unboundedPreceding, 0))
-    w_all = Window.partitionBy(by)
-    cuts = (hist
-            .withColumn("_cum", F.sum("_cnt").over(w_desc))
-            .withColumn("_tot", F.sum("_cnt").over(w_all))
-            .filter(F.col("_cum") >= F.ceil(F.lit(frac) * F.col("_tot")))
-            .groupBy(by).agg(F.max("_b").alias("_cut_b")))
-    q_cut = F.when(F.col("_cut_b") == _LOG_MIN_BUCKET, F.lit(0.0)) \
-        .otherwise(F.pow(F.lit(2.0), F.col("_cut_b") / F.lit(k)))
-    return (scored.join(F.broadcast(cuts), by)
-            .filter(F.col("_b") >= F.col("_cut_b"))
-            .withColumn("q_cut", F.round(q_cut + 1e-9, 4))
-            .drop("_b", "_cut_b"))
-
-
 def pack_sequences(chunks: DataFrame, budget_tokens: int = 2048,
                    n_buckets: int = 1024,
                    len_col: str = "chunk_len") -> DataFrame:
@@ -753,7 +686,7 @@ def gopher_cols(text: Column) -> dict[str, Column]:
     """The Gopher metric expressions alone (rounded per the driver
     contract) — scan-side Columns so a filter stage composes them into
     ONE select with its other score families (the build_filtered
-    discipline). :func:`gopher_rules` builds its relation from these."""
+    discipline)."""
     toks = tokens_col(text)
     n_words = F.size(toks)
     nw = F.when(n_words == 0, F.lit(None)).otherwise(
@@ -802,9 +735,12 @@ def gopher_passes_col(text: Column,
                       max_ellipsis_frac: float = 0.3,
                       min_alpha_frac: float = 0.8,
                       min_stop_hits: int = 2) -> Column:
-    """The full Gopher conjunction as one scan-side boolean Column —
-    thresholds applied to the same rounded metrics gopher_rules emits,
-    so filter-stage behavior matches the audit relation exactly."""
+    """The full Gopher/MassiveWeb rule battery (Rae et al. 2021 appendix
+    A1.1; defaults = the paper's) as one scan-side boolean Column over the
+    rounded metrics of :func:`gopher_cols`: 50 ≤ words ≤ 100k; mean word
+    length in [3, 10]; symbol-to-word ratio ≤ 0.1; ≤ 90% of lines
+    bullet-led; ≤ 30% of lines ellipsis-ended; ≥ 80% of words contain a
+    letter; ≥ 2 distinct Gopher stop words present."""
     m = gopher_cols(text)
     return ((m["n_words"] >= min_words) & (m["n_words"] <= max_words) &
             (m["mean_word_len"] >= min_mean_word_len) &
@@ -814,58 +750,6 @@ def gopher_passes_col(text: Column,
             (m["ellipsis_frac"] <= max_ellipsis_frac) &
             (m["alpha_frac"] >= min_alpha_frac) &
             (m["stop_hits"] >= min_stop_hits))
-
-
-def gopher_rules(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 min_words: int = 50, max_words: int = 100_000,
-                 min_mean_word_len: float = 3.0,
-                 max_mean_word_len: float = 10.0,
-                 max_symbol_ratio: float = 0.1,
-                 max_bullet_frac: float = 0.9,
-                 max_ellipsis_frac: float = 0.3,
-                 min_alpha_frac: float = 0.8,
-                 min_stop_hits: int = 2) -> DataFrame:
-    """The complete Gopher/MassiveWeb quality-rule battery (Rae et al.
-    2021, "Scaling Language Models: ...", appendix A1.1) as ONE scan-side
-    operator — the published rule set most pretraining pipelines quote
-    verbatim (also Penedo 2023 RefinedWeb, Soldaini 2024 Dolma). Per doc:
-    every metric, every per-rule verdict, and the conjunction:
-
-      (id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-       ellipsis_frac, alpha_frac, stop_hits,
-       r_words, r_word_len, r_symbol, r_bullet, r_ellipsis, r_alpha,
-       r_stops, passes)
-
-    Rules (defaults = the paper's): 50 ≤ words ≤ 100k; mean word length
-    in [3, 10]; symbol-to-word ratio ('#' or ellipsis) ≤ 0.1; < 90% of
-    lines bullet-led; < 30% of lines ellipsis-ended; ≥ 80% of words
-    contain a letter; ≥ 2 distinct Gopher stop words present.
-
-    Emitting metrics AND verdicts (not just the filter) is deliberate:
-    threshold tuning reads the distributions without a recompute. Pure
-    Columns, zero exchanges — at 100 TB this rides the scan like
-    quality_cols; rounding follows the +1e-9 driver contract (DuckDB
-    parity pinned in tests; board-candidate SQL twin)."""
-    m = gopher_cols(F.col(text_col))
-    out = df.select(F.col(id_col).alias("id"),
-                    *[v.alias(k) for k, v in m.items()])
-    rules = {
-        "r_words": (F.col("n_words") >= min_words) &
-                   (F.col("n_words") <= max_words),
-        "r_word_len": (F.col("mean_word_len") >= min_mean_word_len) &
-                      (F.col("mean_word_len") <= max_mean_word_len),
-        "r_symbol": F.col("symbol_ratio") <= max_symbol_ratio,
-        "r_bullet": F.col("bullet_frac") <= max_bullet_frac,
-        "r_ellipsis": F.col("ellipsis_frac") <= max_ellipsis_frac,
-        "r_alpha": F.col("alpha_frac") >= min_alpha_frac,
-        "r_stops": F.col("stop_hits") >= min_stop_hits,
-    }
-    out = out.select("*", *[v.alias(k) for k, v in rules.items()])
-    passes = None
-    for k in rules:
-        passes = F.col(k) if passes is None else passes & F.col(k)
-    return out.withColumn("passes", passes)
 
 
 def train_val_split(docs: DataFrame, clusters: DataFrame | None = None,

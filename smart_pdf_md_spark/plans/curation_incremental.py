@@ -17,8 +17,8 @@ State, all through plans/manifests (same Iceberg-shaped commit layer):
                    3-column read — history signatures are never re-banded
                    (a run killed between the first batch's cur_filtered
                    and cur_bands commits backfills it once on replay).
-    cc_labels      near-dup cluster labels via streaming/graph_stats.
-                   update_cc_state star compression — transitively exact
+    cc_labels      near-dup cluster labels via `update_cc_state`'s star
+                   compression — transitively exact
                    across batches (a new doc that bridges two old clusters
                    merges them).
     cur_kept       doc_ids admitted to the corpus (append-only).
@@ -64,7 +64,6 @@ from ..operators.textstats import (
     token_count_cols,
     train_val_split,
 )
-from ..streaming.graph_stats import update_cc_state
 from .manifests import commit_stage, read_stage, stage_committed
 
 _FILTERED, _KEPT, _CHUNKS, _DONE = ("cur_filtered", "cur_kept",
@@ -72,6 +71,44 @@ _FILTERED, _KEPT, _CHUNKS, _DONE = ("cur_filtered", "cur_kept",
 _SKETCH = "cur_content_hll"
 _BANDS = "cur_bands"
 _LINES = "cur_lines"
+_CC = "cc_labels"
+
+
+def update_cc_state(spark: SparkSession, run_dir: str,
+                    batch_edges: DataFrame) -> DataFrame:
+    """Incremental connected components: maintain (name, component=min
+    name) labels as edge batches arrive, without ever re-reading past edges.
+
+    STAR COMPRESSION: the committed labels are a spanning star forest of
+    everything seen so far (every name points at its component root), and a
+    star forest connects exactly the same components as the full edge
+    history. So each batch runs plain CC over (label star edges ∪ new batch
+    edges) — transitively identical to CC over ALL edges ever seen, at
+    O(state + batch) cost with star diameter ≤ 2, so the fixpoint converges
+    in a couple of rounds regardless of how long the deployment has run.
+    Min-label roots are stable: min(merged set) = min of the mins.
+
+    One OVERWRITE commit per batch (labels double as the seen-name roster:
+    isolated names keep component = self), so there is no torn-commit
+    window, and redelivery is idempotent — re-adding edges the labels
+    already encode changes nothing."""
+    from ..operators.cc import connected_components
+
+    batch = batch_edges.select("name_a", "name_b").distinct()
+    roster = batch.select(F.col("name_a").alias("name")).union(
+        batch.select(F.col("name_b").alias("name"))).distinct()
+    edges = batch
+    if stage_committed(run_dir, _CC):
+        prev = read_stage(spark, run_dir, _CC)
+        star = prev.filter(F.col("name") != F.col("component")).select(
+            F.col("component").alias("name_a"), F.col("name").alias("name_b"))
+        edges = edges.unionByName(star)
+        roster = roster.union(prev.select("name")).distinct()
+    labels = connected_components(edges)
+    out = (roster.join(labels, "name", "left")
+           .select("name",
+                   F.coalesce("component", F.col("name")).alias("component")))
+    return commit_stage(out, run_dir, _CC, ["name", "component"])
 
 
 def _history_bands(spark: SparkSession, run_dir: str,

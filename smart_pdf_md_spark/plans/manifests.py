@@ -319,15 +319,15 @@ def commit_stage(
     key_cols: list[str],
     run_id: str | None = None,
     mode: str = "overwrite",
-    deps: list[str] | None = None,
+    deps: dict[str, str | None] | None = None,
     params: dict | None = None,
     metrics: dict | None = None,
 ) -> DataFrame:
     """Write a fresh immutable batch dir, then atomically publish the
     snapshot pointer with the batch's (rows, digest) — observed on the
     write job itself, so the commit is exactly one Spark job — together
-    with the `deps`' current run_ids, the `params` digest and the
-    operator `metrics` counters. A kill
+    with `deps` (upstream stage → the run_id the batch was built from),
+    the `params` digest and the operator `metrics` counters. A kill
     anywhere before the pointer swap leaves the previous snapshot fully
     intact and the new batch invisible (no torn append — ADVICE r1).
 
@@ -379,7 +379,7 @@ def commit_stage(
         marker = {"run_id": run_id, "batches": batches, "stats": stats,
                   "schema": (prev["schema"] if prev
                              else json.loads(schema.json())),
-                  "deps": {d: stage_run_id(run_dir, d) for d in deps or []},
+                  "deps": deps or {},
                   "params": params_hash(params),
                   "metrics": metrics or {}}
         _write_atomic(os.path.join(sdir, "_COMMITTED"), json.dumps(marker))
@@ -412,10 +412,15 @@ def run_stage(
     digest are unchanged (ADVICE r4: rerunning with different knobs must
     rebuild, not serve stale data). `build` may fill `metrics` with
     operator counters; they are committed into the marker with the batch
-    (read them back with `stage_metrics`)."""
+    (read them back with `stage_metrics`).
+
+    The `deps`' run_ids are resolved BEFORE `build` runs, so an upstream
+    commit that lands mid-build leaves this stage stale for the next run
+    instead of being recorded as consumed."""
     if stage_fresh(run_dir, stage, deps, params):
         return read_stage(spark, run_dir, stage), True
-    return commit_stage(build(), run_dir, stage, key_cols, deps=deps,
+    built_from = {d: stage_run_id(run_dir, d) for d in deps or []}
+    return commit_stage(build(), run_dir, stage, key_cols, deps=built_from,
                         params=params, metrics=metrics), False
 
 

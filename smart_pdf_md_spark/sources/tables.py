@@ -117,25 +117,3 @@ def write_triples(df: DataFrame, path: str, mode: str = "overwrite",
     if partition_by_pred:
         w = w.partitionBy("pred")
     w.parquet(path)
-
-
-def write_triples_bucketed(df: DataFrame, table: str, buckets: int = 64,
-                           mode: str = "overwrite") -> None:
-    """Bucketed sink for JOIN-heavy consumers (graph queries).
-
-    `bucketBy(n, subj) + sortBy(subj)` pre-shuffles the table ONCE at write
-    time; every later equi-join or groupBy on `subj` — two-hop self-joins,
-    degree counts, PageRank's edge×rank join — reads co-located buckets and
-    plans with NO Exchange on the bucketed side (asserted in
-    tests/test_plans.py::test_bucketed_self_join_has_no_shuffle). This is
-    the parquet/in-memory-catalog analogue of an Iceberg table with a
-    bucket(subj) partition transform; at 100 TB it converts the per-query
-    shuffle of the biggest table into a one-time write cost."""
-    (df.write.mode(mode)
-       .bucketBy(buckets, "subj").sortBy("subj")
-       .format("parquet")
-       .saveAsTable(table))
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -1,44 +1,9 @@
-"""Distributed BPE training: exact merge-sequence parity with a Python
-reference (Sennrich get_stats/merge semantics, deterministic tie-break),
-encode-table parity, corpus token budgeting, partitioning invariance."""
+"""Out-of-vocabulary rate against a word table: known per-document
+values and DuckDB parity."""
 
 from __future__ import annotations
 
-import pytest
-
 from smart_pdf_md_spark.operators import bpe as B
-
-
-def _ref_merge(s, a, b):
-    out, i, n = [], 0, len(s)
-    while i < n:
-        if i + 1 < n and s[i] == a and s[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(s[i])
-            i += 1
-    return out
-
-
-def _ref_bpe(word_freqs: dict, n_merges: int, min_pair_count: int = 2):
-    vocab = {w: list(w) + [B.END] for w in word_freqs}
-    merges = []
-    for _ in range(n_merges):
-        counts: dict = {}
-        for w, n in word_freqs.items():
-            s = vocab[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + n
-        if not counts:
-            break
-        best_c = max(counts.values())
-        if best_c < min_pair_count:
-            break
-        a, b = min(p for p, c in counts.items() if c == best_c)
-        merges.append((a, b))
-        vocab = {w: _ref_merge(s, a, b) for w, s in vocab.items()}
-    return merges, vocab
 
 
 CORPUS = [
@@ -46,72 +11,6 @@ CORPUS = [
     (2, "newest newest newest newest widest widest widest"),
     (3, "the newest low bid was the widest bid of the day"),
 ]
-
-
-def test_bpe_train_matches_reference_merge_sequence(spark):
-    docs = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    wf = B.word_freq_table(docs)
-    wf_local = {r.word: r.n for r in wf.collect()}
-
-    got = B.bpe_train(wf, n_merges=15)
-    want, ref_vocab = _ref_bpe(wf_local, 15)
-    assert got == want and len(got) == 15
-
-    enc = {r.word: (list(r.bpe_tokens), r.n_bpe)
-           for r in B.bpe_encode_table(wf, got).collect()}
-    for w, syms in ref_vocab.items():
-        assert enc[w][0] == syms, w
-        assert enc[w][1] == len(syms)
-
-    # partitioning invariance: the merge list is a pure function of the
-    # word-frequency table
-    got8 = B.bpe_train(wf.repartition(8), n_merges=15)
-    assert got8 == got
-
-
-@pytest.mark.slow
-def test_bpe_early_stop_and_token_budget(spark):
-    docs = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    wf = B.word_freq_table(docs)
-    wf_local = {r.word: r.n for r in wf.collect()}
-
-    # min_pair_count high enough to stop before n_merges
-    got = B.bpe_train(wf, n_merges=500, min_pair_count=8)
-    want, _ = _ref_bpe(wf_local, 500, min_pair_count=8)
-    assert got == want and 0 < len(got) < 500
-
-    merges = B.bpe_train(wf, n_merges=10)
-    enc = B.bpe_encode_table(wf, merges)
-    counts = {r.doc_id: r.n_bpe_tokens
-              for r in B.bpe_token_count(docs, enc).collect()}
-    _, ref_vocab = _ref_bpe(wf_local, 10)
-    for did, text in CORPUS:
-        want_n = sum(len(ref_vocab[w]) for w in text.lower().split())
-        assert counts[did] == want_n, did
-    # more merges can only shrink (or keep) every word's token count
-    enc15 = B.bpe_encode_table(wf, B.bpe_train(wf, n_merges=15))
-    pairs = {r.word: r.n_bpe for r in enc.collect()}
-    for r in enc15.collect():
-        assert r.n_bpe <= pairs[r.word]
-
-
-@pytest.mark.slow
-def test_bpe_scales_symbol_stream_shrinks(spark):
-    """The per-round pair stream only SHRINKS as merges land (the scale
-    argument in the module docstring): total symbol count after training
-    is strictly below the initial character count."""
-    from pyspark.sql import functions as F
-
-    from smart_pdf_md_spark.sources.tables import load_table
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    wf = B.word_freq_table(docs)
-    merges = B.bpe_train(wf, n_merges=40)
-    assert len(merges) == 40
-    enc = B.bpe_encode_table(wf, merges)
-    init_syms = wf.select(
-        F.sum(F.length("word") + 1)).collect()[0][0]
-    final_syms = enc.select(F.sum("n_bpe")).collect()[0][0]
-    assert final_syms < init_syms
 
 
 def test_oov_rate_known_values_and_duckdb_parity(spark):
@@ -155,115 +54,3 @@ def test_oov_rate_known_values_and_duckdb_parity(spark):
         .sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(got_pd, want, check_dtype=False,
                                   check_exact=False, rtol=0, atol=1e-9)
-
-
-def test_bpe_token_count_oov_fallback_is_counted(spark):
-    """Tokens absent from the encoded vocabulary must not silently drop
-    (ADVICE r7): an OOV word costs its character count + 1 (the zero-merge
-    worst case) and the per-doc OOV word count surfaces loudly."""
-    train = spark.createDataFrame([(1, "low low lower")], ["doc_id", "text"])
-    wf = B.word_freq_table(train)
-    enc = B.bpe_encode_table(wf, B.bpe_train(wf, n_merges=5))
-
-    docs = spark.createDataFrame(
-        [(1, "low lower"), (2, "low zebra"), (3, "qux zebra")],
-        ["doc_id", "text"])
-    got = {r.doc_id: r for r in B.bpe_token_count(docs, enc).collect()}
-    n = {r.word: r.n_bpe for r in enc.collect()}
-    assert (got[1].n_bpe_tokens, got[1].n_oov_words) == \
-        (n["low"] + n["lower"], 0)
-    assert (got[2].n_bpe_tokens, got[2].n_oov_words) == \
-        (n["low"] + len("zebra") + 1, 1)
-    assert (got[3].n_bpe_tokens, got[3].n_oov_words) == \
-        (len("qux") + 1 + len("zebra") + 1, 2)
-
-
-def test_bpe_delta_rounds_touch_only_affected_words(spark):
-    """The r8 delta formulation: each merge round's explode is bounded by
-    the words that actually contained the merged pair — measured via
-    round_stats — while the merge list stays bit-identical to the
-    reference recount."""
-    docs = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    wf = B.word_freq_table(docs)
-    stats: list = []
-    merges = B.bpe_train(wf, n_merges=10, round_stats=stats)
-    want, _ = _ref_bpe({r.word: r.n for r in wf.collect()}, 10)
-    assert merges == want and len(stats) == 10
-
-    vocab = stats[0]["vocab_words"]
-    assert all(0 < s["affected_words"] <= vocab for s in stats)
-    # merges specialize: most rounds touch a strict subset of the vocab
-    assert min(s["affected_words"] for s in stats) < vocab
-
-
-def test_pack_sequences_with_real_bpe_budgets(spark):
-    """VERDICT r7 #7: the learned-vocab token budget replaces the regex
-    proxy in the packing path — chunk-level bpe_token_count (composite
-    key) feeds pack_sequences(len_col='n_bpe_tokens'); packs respect the
-    budget under REAL tokenizer counts and assignments stay deterministic
-    across partitionings."""
-    from pyspark.sql import functions as F
-
-    from smart_pdf_md_spark.operators.textstats import (
-        chunk_documents,
-        pack_sequences,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"tok{j % 7}" for j in range(10 + i * 3)))
-         for i in range(8)], ["doc_id", "text"])
-    wf = B.word_freq_table(docs)
-    enc = B.bpe_encode_table(wf, B.bpe_train(wf, n_merges=8))
-
-    chunks = chunk_documents(docs, chunk_tokens=6, overlap=0)
-    counts = B.bpe_token_count(chunks, enc, text_col="chunk_text",
-                               id_cols=["doc_id", "chunk_idx"])
-    budgeted = chunks.join(counts, ["doc_id", "chunk_idx"])
-    assert budgeted.filter("n_oov_words > 0").count() == 0  # own vocab
-
-    budget = 40
-    packed = pack_sequences(budgeted, budget_tokens=budget,
-                            len_col="n_bpe_tokens")
-    rows = packed.collect()
-    assert len(rows) == budgeted.count()
-    by_pack: dict = {}
-    for r in rows:
-        by_pack.setdefault(r.pack_id, []).append(r)
-    for pid, members in by_pack.items():
-        total = sum(m.n_bpe_tokens for m in members)
-        assert all(m.pack_tokens == total for m in members)
-        if not any(m.overflow for m in members):
-            assert total <= budget
-    # real-BPE budget differs from the regex proxy (the point of wiring)
-    assert budgeted.filter(
-        F.col("n_bpe_tokens") == F.col("chunk_len")).count() \
-        < budgeted.count()
-
-    again = pack_sequences(budgeted.repartition(7), budget_tokens=budget,
-                           len_col="n_bpe_tokens")
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, rows))
-
-
-def test_tokenizer_fertility_per_stratum(spark):
-    """Fertility audit: a stratum the vocabulary was trained on pays
-    fewer tokens per word than an unseen-script stratum, whose words
-    fall back to the counted OOV per-char cost."""
-    train = spark.createDataFrame(
-        [(1, "low lower lowest low low lower newest newest")],
-        ["doc_id", "text"])
-    wf = B.word_freq_table(train)
-    enc = B.bpe_encode_table(wf, B.bpe_train(wf, n_merges=12))
-
-    docs = spark.createDataFrame(
-        [(1, "low lower newest", "en"),
-         (2, "zqxw vbnm kjhg", "xx")],      # fully OOV stratum
-        ["doc_id", "text", "lang"])
-    got = {r.lang: r for r in B.tokenizer_fertility(docs, enc).collect()}
-    n = {r.word: r.n_bpe for r in enc.collect()}
-    assert got["en"].n_words == 3 and got["en"].n_oov_words == 0
-    assert got["en"].n_bpe_tokens == n["low"] + n["lower"] + n["newest"]
-    assert got["xx"].n_oov_words == 3
-    assert got["xx"].n_bpe_tokens == sum(len(w) + 1
-                                         for w in ("zqxw", "vbnm", "kjhg"))
-    assert got["xx"].tokens_per_word > got["en"].tokens_per_word
-    assert got["xx"].oov_rate == 1.0 and got["en"].oov_rate == 0.0

@@ -1,9 +1,10 @@
-"""Training-data operators: dedup (exact/jaccard/minhash/simhash/cosine),
-ANN similarity (brute-force vs LSH recall), multimodal plumbing."""
+"""Training-data operators: dedup (exact/jaccard/minhash/cosine), ANN
+similarity (brute-force vs IVF/PQ recall), multimodal plumbing."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smart_pdf_md_spark.operators import dedup as D
@@ -11,6 +12,19 @@ from smart_pdf_md_spark.operators import multimodal as MM
 from smart_pdf_md_spark.operators import similarity as SIM
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """recall@k of the approximate result vs the exact baseline, per query."""
+    e = exact.select("query_id", "neighbor_id")
+    a = approx.select("query_id", F.col("neighbor_id").alias("got"))
+    hit = e.join(a, (e.query_id == a.query_id) & (e.neighbor_id == a.got)) \
+           .groupBy(e.query_id).agg(F.count("*").alias("hits"))
+    tot = e.groupBy("query_id").agg(F.count("*").alias("total"))
+    return (tot.join(hit, "query_id", "left")
+            .select("query_id",
+                    F.round(F.coalesce(F.col("hits"), F.lit(0)) /
+                            F.col("total"), 4).alias("recall")))
 
 
 @pytest.fixture(scope="module")
@@ -51,68 +65,25 @@ def test_minhash_dedup_finds_exact_duplicates(spark, corpus_docs):
         assert pairs.filter("est_jaccard < 0.99").count() == 0
 
 
-@pytest.mark.slow
-def test_simhash_identical_zero_hamming(spark, corpus_docs):
-    pairs = D.simhash_pairs(corpus_docs.filter("length(text) > 0"),
-                            max_hamming=0)
-    # hamming 0 pairs must be (near-)identical texts: verify against exact dedup
-    exact_groups = D.exact_dedup(corpus_docs).filter("n_copies > 1").count()
-    if exact_groups:
-        assert pairs.count() > 0
-
-
-@pytest.mark.slow
-def test_ann_lsh_recall_vs_bruteforce(spark):
-    from smart_pdf_md_spark.sources.tables import load_table
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = SIM.topk_bruteforce(emb, queries, k=5)
-    # few planes, many tables: these synthetic embeddings are near-random
-    # (top-5 neighbors sit at ~70° angles), so narrow buckets kill recall
-    approx = SIM.topk_lsh(emb, queries, k=5, n_planes=3, n_tables=8)
-    rec = SIM.ann_recall(exact, approx).agg(F.avg("recall")).collect()[0][0]
-    assert rec >= 0.6, f"LSH recall too low: {rec}"
-    # exact search returns exactly k per query, ranked 1..k
-    counts = exact.groupBy("query_id").count().collect()
-    assert all(r["count"] == 5 for r in counts)
-
-
 def test_multimodal_plumbing(spark):
     from smart_pdf_md_spark.sources.tables import load_table
     docs = load_table(spark, SF_DIR, "documents")
     media = MM.documents_as_media(docs)
-    feats = MM.extract_features(media)
-    row = feats.first()
-    assert len(row.feature) == MM.FEATURE_DIM
-    assert all(0.0 <= x <= 1.0 for x in row.feature)
-    # payload column is pruned from the output schema
-    assert "payload" not in feats.columns
-    # deterministic: same payload → same feature
-    f2 = MM.extract_features(media).first()
-    assert f2.feature == row.feature
-    # unstubbed decode raises exactly at the decode boundary
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        MM.extract_features(media, decode_stub=False).first()
-    frames = MM.frame_sample_plan(media, every_n=10)
-    assert frames.count() >= docs.count()  # ≥1 frame per media row
-
-
-def test_simhash_banded_exact_at_hamming3(spark, corpus_docs):
-    """For max_hamming ≤ 3 the 4×16-bit banding is pigeonhole-complete:
-    banded pairs == brute-force O(n²) hamming pairs."""
-    docs = corpus_docs.filter("length(text) > 0").limit(150)
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in D.simhash_pairs(docs, max_hamming=3).collect()}
-
-    sig = D.simhash_signatures(docs).select("id", "simhash")
-    a = sig.select(F.col("id").alias("id_a"), F.col("simhash").alias("h_a"))
-    b = sig.select(F.col("id").alias("id_b"), F.col("simhash").alias("h_b"))
-    brute = (a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("hamming",
-                         F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-             .filter("hamming <= 3"))
-    want = {(r.id_a, r.id_b, r.hamming) for r in brute.collect()}
-    assert got == want
+    assert media.columns == ["media_id", "media_type", "payload", "meta"]
+    assert media.count() == docs.count()
+    got = {r.media_id: r for r in media.collect()}
+    for d in docs.select("doc_id", "text", "lang").collect():
+        m = got[d.doc_id]
+        # the payload is the text's bytes; metadata is derived scan-side
+        assert bytes(m.payload) == d.text.encode("utf-8")
+        assert m.meta.n_bytes == len(m.payload)
+        assert 0 <= m.meta.width < 1920 and 0 <= m.meta.height < 1080
+        assert m.media_type == ("image/png" if d.lang == "en"
+                                else "audio/wav")
+    # deterministic: a rebuild gives the same metadata
+    again = {r.media_id: r.meta for r in
+             MM.documents_as_media(docs.repartition(3)).collect()}
+    assert again == {k: r.meta for k, r in got.items()}
 
 
 def test_chunk_documents_semantics(spark):
@@ -183,38 +154,6 @@ def test_scrub_text_idempotent(spark):
     assert a == b
 
 
-@pytest.mark.slow
-def test_embedding_lsh_dedup_recall_vs_exact(spark):
-    """LSH-bucketed embedding dedup: every emitted pair is exact-verified
-    (subset of the brute-force pair set, same cosines) and recall on planted
-    near-dup clusters clears 0.8."""
-    import math
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    vid = 0
-    for c in range(40):  # 40 clusters of 3 near-identical vectors
-        base = [rng.gauss(0, 1) for _ in range(64)]
-        nrm = math.sqrt(sum(x * x for x in base))
-        base = [x / nrm for x in base]
-        for _ in range(3):
-            noisy = [x + rng.gauss(0, 0.01) for x in base]
-            rows.append((vid, noisy)); vid += 1
-    for _ in range(80):  # unrelated background vectors
-        rows.append((vid, [rng.gauss(0, 1) for _ in range(64)])); vid += 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    exact = {(r.id_a, r.id_b): r.cosine
-             for r in D.embedding_cosine_pairs(emb, threshold=0.95).collect()}
-    lsh = {(r.id_a, r.id_b): r.cosine
-           for r in D.embedding_cosine_pairs_lsh(emb, threshold=0.95).collect()}
-    assert set(lsh) <= set(exact)                 # precision: exact-verified
-    assert all(lsh[k] == exact[k] for k in lsh)   # identical cosines
-    assert len(exact) >= 40                        # clusters really are dups
-    assert len(lsh) / len(exact) >= 0.8, f"recall {len(lsh)/len(exact):.2f}"
-
-
 def test_local_link_path_reports_hot_bucket_drops(spark):
     """The driver-local linking fast path must surface the same hot-bucket
     drop metrics as the distributed path (same 'ab'*k one-bucket fixture)."""
@@ -231,12 +170,12 @@ def test_local_link_path_reports_hot_bucket_drops(spark):
 
 def test_embedding_cosine_cartesian_guard(spark):
     """The O(n²) exact baseline refuses inputs above max_rows (r2 VERDICT
-    item 2) with a pointer to the LSH scale path; raising the bound or
+    item 2) with a pointer to the ANN scale path; raising the bound or
     passing None forces it through. Unmarked (ADVICE r5): this is the
     cartesian-guard correctness gate — it stays in the default loop."""
     rows = [(i, [float(i), 1.0]) for i in range(20)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    with pytest.raises(ValueError, match="embedding_cosine_pairs_lsh"):
+    with pytest.raises(ValueError, match="topk_ivf"):
         D.embedding_cosine_pairs(emb, threshold=0.9, max_rows=10).count()
     assert D.embedding_cosine_pairs(emb, threshold=0.9, max_rows=20).count() >= 0
     assert D.embedding_cosine_pairs(emb, threshold=0.9, max_rows=None).count() >= 0
@@ -363,10 +302,9 @@ def test_minhash_prebuilt_bands_match_derived(spark):
 
 
 def test_sub_n_token_docs_excluded_from_all_signatures(spark):
-    """The sub-n-token rule is UNIFORM across exact Jaccard, MinHash, and
-    SimHash (r4 VERDICT what's-wrong #1): docs with < 3 tokens (Jaccard /
-    MinHash) have no 3-gram shingles, token-less docs (SimHash) have no
-    feature set — none may emit signatures or pairs, so empty docs cannot
+    """The sub-n-token rule is UNIFORM across exact Jaccard and MinHash
+    (r4 VERDICT what's-wrong #1): docs with < 3 tokens have no 3-gram
+    shingles — none may emit signatures or pairs, so empty docs cannot
     cluster with each other in run_curation's dedup stage."""
     rows = [(0, ""), (1, ""), (2, "a b"), (3, "a b"),
             (4, "x y z w v u t s"), (5, "x y z w v u t s")]
@@ -376,12 +314,8 @@ def test_sub_n_token_docs_excluded_from_all_signatures(spark):
              for r in D.ngram_jaccard_pairs(docs, threshold=0.7).collect()}
     mh = {(r.id_a, r.id_b)
           for r in D.minhash_dedup_pairs(docs, threshold=0.7).collect()}
-    sh = {(r.id_a, r.id_b) for r in D.simhash_pairs(docs).collect()}
     assert exact == {(4, 5)}
     assert mh == {(4, 5)}
-    # simhash tokenizes unigram-wise, so only the 0-token docs are excluded
-    assert (4, 5) in sh and not {p for p in sh if p[0] < 2 or p[1] < 2}
-    assert D.simhash_signatures(docs).count() == 4  # ids 2..5 only
 
 
 @pytest.fixture(scope="module")
@@ -544,11 +478,11 @@ def test_ivf_recall_vs_bruteforce(spark, clustered_emb):
     cents = SIM.ivf_train(clustered_emb, n_lists=8, n_iters=3)
     approx = SIM.topk_ivf(clustered_emb, queries, k=5, nprobe=4,
                           centroids=cents)
-    rec = SIM.ann_recall(exact, approx).agg(F.avg("recall")).collect()[0][0]
+    rec = ann_recall(exact, approx).agg(F.avg("recall")).collect()[0][0]
     assert rec >= 0.7, f"IVF recall too low: {rec}"
     full = SIM.topk_ivf(clustered_emb, queries, k=5, nprobe=8,
                         centroids=cents)
-    rec_full = SIM.ann_recall(exact, full).agg(F.avg("recall")).collect()[0][0]
+    rec_full = ann_recall(exact, full).agg(F.avg("recall")).collect()[0][0]
     assert rec_full == 1.0, f"nprobe=n_lists must be exhaustive: {rec_full}"
 
 
@@ -596,8 +530,8 @@ def test_ngram_jaccard_prefix_filter_is_exact(spark):
 
     for thr in (0.7, 0.8, 0.9):
         got = {(r.id_a, r.id_b): r.jaccard
-               for r in D.ngram_jaccard_pairs_prefix(docs, n=3,
-                                                     threshold=thr).collect()}
+               for r in D.ngram_jaccard_pairs(docs, n=3, threshold=thr,
+                                              regime="prefix").collect()}
         base = {(r.id_a, r.id_b): r.jaccard
                 for r in D.ngram_jaccard_pairs(docs, n=3,
                                                threshold=thr).collect()}
@@ -678,7 +612,7 @@ def test_ivf_train_on_sample_and_unnormalized_pool(spark, clustered_emb):
     exact = SIM.topk_bruteforce(clustered_emb, queries, k=5)
     approx = SIM.topk_ivf(clustered_emb, queries, k=5, nprobe=8,
                           centroids=cents)
-    rec = SIM.ann_recall(exact, approx).agg(F.avg("recall")).collect()[0][0]
+    rec = ann_recall(exact, approx).agg(F.avg("recall")).collect()[0][0]
     assert rec == 1.0  # nprobe = n_lists stays exhaustive on sampled codebook
 
     df = spark.createDataFrame(
@@ -823,7 +757,8 @@ def test_ngram_jaccard_short_doc_parity_with_oracle(spark):
     got = sorted((r.id_a, r.id_b, r.jaccard) for r in
                  D.ngram_jaccard_pairs(sdf, threshold=0.2).collect())
     got_prefix = sorted((r.id_a, r.id_b, r.jaccard) for r in
-                        D.ngram_jaccard_pairs_prefix(sdf, threshold=0.2).collect())
+                        D.ngram_jaccard_pairs(sdf, threshold=0.2,
+                                              regime="prefix").collect())
 
     con = duckdb.connect()
     con.register("documents", pdf)
@@ -861,8 +796,8 @@ def test_ngram_jaccard_auto_regime_selection(spark):
         assert metrics["regime"] == expected, metrics
         got_post = sorted(map(tuple, D.ngram_jaccard_pairs(
             df, threshold=0.5, regime="postings").collect()))
-        got_pref = sorted(map(tuple, D.ngram_jaccard_pairs_prefix(
-            df, threshold=0.5).collect()))
+        got_pref = sorted(map(tuple, D.ngram_jaccard_pairs(
+            df, threshold=0.5, regime="prefix").collect()))
         assert got_auto == got_post == got_pref
     # the heavy fixture actually produces pairs (boilerplate J > 0.5)
     df = spark.createDataFrame(heavy, ["doc_id", "text"])

@@ -5,8 +5,12 @@ matches a DuckDB recomputation bit-for-bit (board-candidate SQL twin)."""
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import functions as F
 
-from smart_pdf_md_spark.operators.textstats import gopher_rules
+from smart_pdf_md_spark.operators.textstats import (
+    gopher_cols,
+    gopher_passes_col,
+)
 
 _GOOD = ("the story of it is on a hill and that day we have been " +
          " ".join(f"word{i} with more" for i in range(20)))
@@ -28,17 +32,42 @@ def _fixture():
     return pd.DataFrame(rows, columns=["doc_id", "text"])
 
 
+def _gopher(docs):
+    """(id, every Gopher metric, passes) — the metric Columns and the
+    conjunction the curation filter stage composes."""
+    text = F.col("text")
+    return docs.select(F.col("doc_id").alias("id"),
+                       *[v.alias(k) for k, v in gopher_cols(text).items()],
+                       gopher_passes_col(text).alias("passes"))
+
+
+def _failed_rules(r) -> set[str]:
+    """The default thresholds (the paper's), one verdict per rule."""
+    rules = {
+        "words": 50 <= r.n_words <= 100_000,
+        "word_len": 3.0 <= r.mean_word_len <= 10.0,
+        "symbol": r.symbol_ratio <= 0.1,
+        "bullet": r.bullet_frac <= 0.9,
+        "ellipsis": r.ellipsis_frac <= 0.3,
+        "alpha": r.alpha_frac >= 0.8,
+        "stops": r.stop_hits >= 2,
+    }
+    return {k for k, ok in rules.items() if not ok}
+
+
 def test_gopher_rules_planted_violations(spark):
     docs = spark.createDataFrame(_fixture())
-    got = {r.id: r for r in gopher_rules(docs).collect()}
-    assert got[0].passes
-    assert not got[1].r_words and got[1].r_stops
-    assert not got[2].r_word_len and got[2].r_words is not None
-    assert not got[3].r_symbol and got[3].symbol_ratio > 0.1
-    assert not got[4].r_bullet and got[4].bullet_frac == 1.0
-    assert not got[5].r_ellipsis and got[5].ellipsis_frac == 1.0
-    assert not got[6].r_alpha and got[6].alpha_frac < 0.8
-    assert not got[7].r_stops and got[7].stop_hits == 0
+    got = {r.id: r for r in _gopher(docs).collect()}
+    assert got[0].passes and _failed_rules(got[0]) == set()
+    assert "words" in _failed_rules(got[1]) and "stops" not in \
+        _failed_rules(got[1])
+    assert "word_len" in _failed_rules(got[2])
+    assert "symbol" in _failed_rules(got[3]) and got[3].symbol_ratio > 0.1
+    assert "bullet" in _failed_rules(got[4]) and got[4].bullet_frac == 1.0
+    assert "ellipsis" in _failed_rules(got[5]) and \
+        got[5].ellipsis_frac == 1.0
+    assert "alpha" in _failed_rules(got[6]) and got[6].alpha_frac < 0.8
+    assert "stops" in _failed_rules(got[7]) and got[7].stop_hits == 0
     assert not got[8].passes and got[8].n_words == 0
     for i in range(1, 9):
         assert not got[i].passes
@@ -92,7 +121,7 @@ def test_gopher_rules_duckdb_parity(spark):
         AS stop_hits
     FROM tk JOIN ln USING (doc_id) ORDER BY id
     """).df()
-    got = (gopher_rules(docs)
+    got = (_gopher(docs)
            .select("id", "n_words", "mean_word_len", "symbol_ratio",
                    "bullet_frac", "ellipsis_frac", "alpha_frac",
                    "stop_hits")

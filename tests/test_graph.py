@@ -1,5 +1,5 @@
-"""Graph operators over the triple table: degrees, neighbors, two-hop,
-PageRank (determinism + sanity on a hand-checkable graph)."""
+"""Graph operators over the triple table: degrees, neighbors, two-hop, PageRank
+(determinism + sanity on a hand-checkable graph), triangles, edge PMI."""
 
 from __future__ import annotations
 
@@ -54,50 +54,6 @@ def test_pagerank_sane_and_deterministic(tiny):
     assert r1["d"] > r1["a"]
 
 
-def _py_ppr(edge_list, seeds, iterations=8, damping=0.85):
-    """Reference power iteration of the identical PPR formulation."""
-    nodes = sorted({n for e in edge_list for n in e})
-    out = {}
-    for u, v in edge_list:
-        out.setdefault(u, []).append(v)
-    live = [s for s in seeds if s in nodes]
-    sw = 1.0 / len(live)
-    s = {n: (sw if n in live else 0.0) for n in nodes}
-    rank = dict(s)
-    for _ in range(iterations):
-        inflow = {n: 0.0 for n in nodes}
-        for u, vs in out.items():
-            for v in vs:
-                inflow[v] += rank[u] / len(vs)
-        dangling = 1.0 - sum(rank[n] for n in nodes if n in out)
-        rank = {n: s[n] * (1 - damping)
-                + damping * (inflow[n] + s[n] * dangling)
-                for n in nodes}
-    return {n: round(r, 6) for n, r in rank.items()}
-
-
-def test_personalized_pagerank_vs_python_and_locality(tiny):
-    """PPR ranks equal a reference Python power iteration of the same
-    formulation; mass stays near the seed's component (the x→y island
-    gets ~0), and ranks sum to ~1. Absent seeds are ignored; an
-    all-absent seed list raises."""
-    from smart_pdf_md_spark.operators.graph import personalized_pagerank
-
-    edge_list = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("x", "y")]
-    # 'ghost' is ignored (absent from the graph) — parity is vs seeds={a}
-    got = {r.node: r.rank
-           for r in personalized_pagerank(tiny, ["a", "ghost"], iterations=5)
-           .collect()}
-    assert got == _py_ppr(edge_list, ["a"], iterations=5)
-    assert abs(sum(got.values()) - 1.0) < 1e-3
-    assert got["x"] == 0.0 and got["y"] == 0.0     # off-seed island
-    assert got["c"] > got["b"] > 0                 # mass follows the seed
-
-    # an entirely-absent seed list is an error, not a silent zero vector
-    with pytest.raises(ValueError, match="no seed"):
-        personalized_pagerank(tiny, ["ghost"])
-
-
 @pytest.mark.slow
 def test_kg_pagerank_runs(spark, corpus_sdf):
     from smart_pdf_md_spark.plans.pipeline import build_triples
@@ -134,14 +90,17 @@ def test_salted_count_equals_plain_on_skewed_corpus(spark, corpus_sdf):
     exactly the plain groupBy result (the salt only reshapes the shuffle)."""
     from pyspark.sql import functions as F
 
-    from smart_pdf_md_spark.operators.skew import salted_count
+    from smart_pdf_md_spark.operators.skew import salted_agg
 
-    got = {r.repo: r.n for r in
-           salted_count(corpus_sdf, "repo", ["repo", "path"]).collect()}
-    want = {r.repo: r["count"] for r in
-            corpus_sdf.groupBy("repo").count().collect()}
+    sized = corpus_sdf.withColumn("size", F.length("content"))
+    got = {r.repo: (r.n, r.sum_value) for r in
+           salted_agg(sized, "repo", "size", ["repo", "path"]).collect()}
+    want = {r.repo: (r.n, r.s) for r in
+            sized.groupBy("repo").agg(F.count("*").alias("n"),
+                                      F.sum("size").alias("s")).collect()}
     assert got == want
-    assert max(want.values()) > sum(want.values()) * 0.25  # skew is real
+    counts = [n for n, _ in want.values()]
+    assert max(counts) > sum(counts) * 0.25  # skew is real
 
 
 def test_triangle_count_exact_vs_bruteforce(spark):
@@ -176,130 +135,6 @@ def test_triangle_count_exact_vs_bruteforce(spark):
     brute = sum(1 for x, y, z in itertools.combinations(sorted(adj), 3)
                 if y in adj[x] and z in adj[x] and z in adj[y])
     assert tri(list(edges)) == brute > 0
-
-
-def test_shortest_paths_vs_python_bfs(spark):
-    """Frontier BFS == reference Python BFS on a random directed graph for
-    multiple landmarks; chain closed form; undirected mode symmetric;
-    unreachable pairs absent."""
-    import random
-    from collections import deque
-
-    from smart_pdf_md_spark.operators.graph import shortest_paths
-
-    rng = random.Random(17)
-    nodes = [f"n{i}" for i in range(25)]
-    edge_list = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)}
-    edge_list |= {("a", "b"), ("b", "c"), ("c", "d")}  # known chain
-    df = spark.createDataFrame(
-        [(s, "E", d) for s, d in edge_list], ["subj", "pred", "obj"])
-
-    def py_bfs(targets, undirected):
-        # distance FROM node TO target following edge direction == BFS on
-        # reversed edges from the target
-        rev = {}
-        for s, d in edge_list:
-            rev.setdefault(d, set()).add(s)
-            if undirected:
-                rev.setdefault(s, set()).add(d)
-        out = {}
-        for t in targets:
-            dist = {t: 0}
-            q = deque([t])
-            while q:
-                x = q.popleft()
-                for pred in rev.get(x, ()):
-                    if pred not in dist:
-                        dist[pred] = dist[x] + 1
-                        q.append(pred)
-            for n_, d_ in dist.items():
-                out[(n_, t)] = d_
-        return out
-
-    for und in (False, True):
-        got = {(r.node, r.landmark): r.distance
-               for r in shortest_paths(df, ["d", "n0"],
-                                       undirected=und).collect()}
-        assert got == py_bfs(["d", "n0"], und), f"undirected={und}"
-    assert got[("a", "d")] == 3 or ("a", "d") not in got  # chain (unless shortcut)
-
-
-def test_shortest_paths_absent_landmark_emits_nothing(spark):
-    """A landmark not in the graph's node set seeds no rows (GraphFrames
-    shortestPaths semantics; ADVICE r4 — the r4 code emitted a phantom
-    (zzz, zzz, 0) self-row for non-existent vertices)."""
-    from smart_pdf_md_spark.operators.graph import shortest_paths
-
-    df = spark.createDataFrame([("a", "E", "b")], ["subj", "pred", "obj"])
-    got = {(r.node, r.landmark): r.distance
-           for r in shortest_paths(df, ["zzz", "b"]).collect()}
-    assert got == {("b", "b"): 0, ("a", "b"): 1}
-
-
-def test_iterative_graph_edges_keep_natural_partitioning(spark):
-    """Scale-shape regression for r4 VERDICT what's-wrong #2: the
-    corpus-sized edge relation feeding shortest_paths/pagerank is
-    persist()ed columnar with NO explicit Coalesce/Repartition pinning it
-    to parallelism/4 fat partitions."""
-    from smart_pdf_md_spark.operators.graph import _edge_set
-
-    df = spark.createDataFrame(
-        [(f"n{i}", "E", f"n{i + 1}") for i in range(50)],
-        ["subj", "pred", "obj"])
-    for und in (False, True):
-        e = _edge_set(df, undirected=und)
-        try:
-            plan = e._jdf.queryExecution().toString()
-            assert "Coalesce" not in plan and "Repartition" not in plan
-            assert e.storageLevel.useMemory  # columnar InMemoryRelation
-        finally:
-            e.unpersist()
-
-
-def test_hyperanf_neighborhood_function_and_effective_diameter(spark):
-    """HyperANF on the 4-path: per-t estimates within sketch error of the
-    exact neighborhood function (4, 10, 14, 16 ordered pairs at t=0..3),
-    monotone, saturating at the diameter; the 0.9-effective diameter
-    interpolates between t=2 and t=3."""
-    from smart_pdf_md_spark.operators.graph import (
-        effective_diameter,
-        neighborhood_function,
-    )
-
-    triples = spark.createDataFrame(
-        [(f"n{i}", "linksTo", f"n{i+1}") for i in range(1, 4)],
-        ["subj", "pred", "obj"])
-    nf = neighborhood_function(triples, t_max=6, p=8, undirected=True)
-    vals = dict((r.t, r.nf_est) for r in nf.collect())
-    exact = {0: 4.0, 1: 10.0, 2: 14.0, 3: 16.0}
-    assert set(exact) <= set(vals)          # early-stop no sooner than t=3
-    for t, e in exact.items():
-        assert abs(vals[t] - e) / e < 0.06, (t, vals[t])
-    ts = sorted(vals)
-    assert all(vals[a] <= vals[b] + 1e-9
-               for a, b in zip(ts, ts[1:]))
-    ed = effective_diameter(nf, q=0.9)
-    assert 2.0 <= ed <= 3.0
-
-
-@pytest.mark.slow
-def test_harmonic_centrality_approx_vs_exact(spark):
-    """Path 1-2-3-4 (undirected): exact H = [1.833, 2.5, 2.5, 1.833];
-    sketch estimates land within 8%; the two middle nodes outrank the
-    endpoints."""
-    from smart_pdf_md_spark.operators.graph import harmonic_centrality_approx
-
-    triples = spark.createDataFrame(
-        [(f"n{i}", "linksTo", f"n{i+1}") for i in range(1, 4)],
-        ["subj", "pred", "obj"])
-    got = {r.node: r.centrality
-           for r in harmonic_centrality_approx(triples, p=10).collect()}
-    exact = {"n1": 1 + 0.5 + 1 / 3, "n2": 2.5, "n3": 2.5,
-             "n4": 1 + 0.5 + 1 / 3}
-    assert set(got) == set(exact)
-    for n, e in exact.items():
-        assert abs(got[n] - e) / e < 0.08, (n, got[n], e)
-    assert min(got["n2"], got["n3"]) > max(got["n1"], got["n4"])
 
 
 def test_edge_pmi_known_values_and_duckdb_parity(spark):

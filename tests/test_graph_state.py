@@ -1,96 +1,8 @@
-"""Incremental degree maintenance: delta-merge correctness, redelivery
-idempotence, torn-commit self-heal, and streaming composition."""
+"""Incremental connected components (the cc_labels state behind
+`curate_append`): star-compressed CC equals batch CC over the full edge
+history."""
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import functions as F
-
-from smart_pdf_md_spark.operators.graph import degrees
-from smart_pdf_md_spark.streaming.graph_stats import (
-    _EDGES,
-    update_degree_state,
-)
-
-
-def _t(spark, edges):
-    return spark.createDataFrame(
-        [(u, "E", v) for u, v in edges], ["subj", "pred", "obj"])
-
-
-def _deg(df):
-    return {(r.node): (r.out_degree, r.in_degree) for r in df.collect()}
-
-
-def test_incremental_degrees_equals_batch_recompute(spark, tmp_path):
-    run_dir = str(tmp_path / "gs")
-    b1 = [("a", "b"), ("b", "c"), ("a", "c")]
-    b2 = [("b", "c"), ("c", "d"), ("d", "a")]  # overlaps b1 on (b, c)
-
-    d1 = update_degree_state(spark, run_dir, _t(spark, b1))
-    assert _deg(d1) == _deg(degrees(_t(spark, b1)))
-
-    d2 = update_degree_state(spark, run_dir, _t(spark, b2))
-    want = _deg(degrees(_t(spark, sorted(set(b1) | set(b2)))))
-    assert _deg(d2) == want
-
-    # redelivery of batch 2 (at-least-once source) merges NOTHING
-    d3 = update_degree_state(spark, run_dir, _t(spark, b2))
-    assert _deg(d3) == want
-
-    # triples with duplicate (subj, obj) under different preds count once
-    dup = spark.createDataFrame(
-        [("a", "X", "b"), ("a", "Y", "b")], ["subj", "pred", "obj"])
-    d4 = update_degree_state(spark, run_dir, dup)
-    assert _deg(d4) == want  # edge (a, b) already in state
-
-
-def test_incremental_degrees_self_heals_after_torn_commit(spark, tmp_path):
-    """A kill between the edge append and the degree merge leaves
-    degrees_state stale; the next call must rebuild it exactly."""
-    from smart_pdf_md_spark.plans.manifests import commit_stage
-
-    run_dir = str(tmp_path / "gs")
-    b1 = [("a", "b"), ("b", "c")]
-    update_degree_state(spark, run_dir, _t(spark, b1))
-
-    # simulate the torn window: edges advance, degrees don't
-    orphan = spark.createDataFrame([("x", "y")], ["subj", "obj"])
-    commit_stage(orphan, run_dir, _EDGES, ["subj", "obj"], mode="append")
-
-    healed = update_degree_state(
-        spark, run_dir,
-        spark.createDataFrame([], "subj string, pred string, obj string"))
-    want = _deg(degrees(_t(spark, b1 + [("x", "y")])))
-    assert _deg(healed) == want
-
-
-def test_streaming_degrees_end_to_end(spark, tmp_path):
-    import pandas as pd
-
-    from smart_pdf_md_spark.streaming.graph_stats import streaming_degrees
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    pd.DataFrame([("a", "E", "b"), ("b", "E", "c")],
-                 columns=["subj", "pred", "obj"]) \
-        .to_parquet(os.path.join(src, "p1.parquet"), index=False)
-    pd.DataFrame([("b", "E", "c"), ("c", "E", "a")],
-                 columns=["subj", "pred", "obj"]) \
-        .to_parquet(os.path.join(src, "p2.parquet"), index=False)
-
-    run_dir = str(tmp_path / "gs")
-    stream = (spark.readStream.schema("subj string, pred string, obj string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = streaming_degrees(spark, run_dir, stream,
-                          checkpoint_dir=str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    from smart_pdf_md_spark.plans.manifests import read_stage
-    got = _deg(read_stage(spark, run_dir, "degrees_state"))
-    want = _deg(degrees(_t(spark, [("a", "b"), ("b", "c"), ("c", "a")])))
-    assert got == want
 
 
 def test_incremental_cc_star_compression(spark, tmp_path):
@@ -98,7 +10,7 @@ def test_incremental_cc_star_compression(spark, tmp_path):
     new components appear, a later edge MERGES two old components under the
     global min label, isolated-so-far names persist in the roster, and
     redelivering an already-encoded batch changes nothing."""
-    from smart_pdf_md_spark.streaming.graph_stats import update_cc_state
+    from smart_pdf_md_spark.plans.curation_incremental import update_cc_state
 
     run_dir = str(tmp_path / "cc")
 

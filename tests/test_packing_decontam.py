@@ -1,5 +1,6 @@
-"""Round-5 training-data operators: benchmark decontamination, k-core,
-adaptive per-stratum quality filtering, and sequence packing."""
+"""Round-5 training-data operators: benchmark decontamination, adaptive
+per-stratum quality filtering, sequence packing, weighted sampling, and
+cross-run stage-digest verification."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ from pyspark.sql import functions as F
 
 from smart_pdf_md_spark.operators import dedup as D
 from smart_pdf_md_spark.operators import textstats as TS
-from smart_pdf_md_spark.operators.graph import k_core
 
 
 def _gram13_sql(arr: str) -> str:
@@ -84,127 +84,6 @@ def test_decontaminate_clean_corpus_all_clean(spark):
     out = D.decontaminate(docs, bench)
     assert out.count() == 5
     assert out.filter("contaminated").count() == 0
-
-
-def _py_k_core(edge_list, k):
-    """Reference peeling in plain Python."""
-    adj: dict[str, set[str]] = {}
-    for u, v in edge_list:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    changed = True
-    while changed:
-        changed = False
-        for n in list(adj):
-            if len(adj[n]) < k:
-                for m in adj.pop(n):
-                    adj[m].discard(n)
-                changed = True
-    return {n: len(ns) for n, ns in adj.items()}
-
-
-def test_k_core_vs_python_peeling(spark):
-    """k-core membership AND in-core degrees equal a reference Python
-    peeling on a random graph plus a planted 5-clique (a 4-core the random
-    background at this density never produces)."""
-    import random
-
-    rng = random.Random(41)
-    nodes = [f"n{i}" for i in range(40)]
-    edge_list = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(70)}
-    clique = ["c0", "c1", "c2", "c3", "c4"]
-    edge_list |= {(a, b) for a in clique for b in clique if a < b}
-    df = spark.createDataFrame(
-        [(u, "E", v) for u, v in edge_list], ["subj", "pred", "obj"])
-
-    for k in (2, 3, 4):
-        got = {r.node: r.degree for r in k_core(df, k).collect()}
-        assert got == _py_k_core(edge_list, k), f"k={k}"
-    assert set(clique) <= set(_py_k_core(edge_list, 4))  # clique survives
-
-
-@pytest.mark.slow
-def test_k_core_delta_peel_deep_cascade(spark):
-    """The delta-peel formulation must stay exact through a DEEP peeling
-    cascade: a 24-node path peels from both ends one pair per round (~12
-    delta rounds, each decrementing exactly the new endpoints) until only
-    the planted 4-clique's 2-core remains."""
-    path = [(f"p{i}", f"p{i+1}") for i in range(23)]
-    clique = ["c0", "c1", "c2", "c3"]
-    edges = path + [(a, b) for a in clique for b in clique if a < b]
-    edges.append(("p0", "c0"))  # attach the path to the clique
-    df = spark.createDataFrame(
-        [(u, "E", v) for u, v in edges], ["subj", "pred", "obj"])
-    got = {r.node: r.degree for r in k_core(df, 2).collect()}
-    assert got == _py_k_core(edges, 2) == {c: 3 for c in clique}
-
-
-def _py_lpa(edge_list, max_iter=10):
-    """Reference implementation of the same deterministic sync rule."""
-    adj: dict[str, set[str]] = {}
-    for u, v in edge_list:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    labels = {n: n for n in adj}
-    for _ in range(max_iter):
-        new = {}
-        for n in adj:
-            counts: dict[str, int] = {labels[n]: 1}  # self-vote
-            for m in adj[n]:
-                counts[labels[m]] = counts.get(labels[m], 0) + 1
-            best = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-            new[n] = best
-        if new == labels:
-            return labels
-        labels = new
-    return labels
-
-
-def test_label_propagation_splits_bridged_cliques(spark):
-    """Fast LPA representative: two 5-cliques joined by ONE bridge edge —
-    a single connected component — get two distinct communities (the
-    signal CC cannot produce), matching the reference Python
-    implementation of the same deterministic rule."""
-    from smart_pdf_md_spark.operators.graph import label_propagation
-
-    a = [f"a{i}" for i in range(5)]
-    b = [f"b{i}" for i in range(5)]
-    edge_list = {(x, y) for x in a for y in a if x < y}
-    edge_list |= {(x, y) for x in b for y in b if x < y}
-    edge_list.add(("a0", "b0"))                       # the bridge
-    df = spark.createDataFrame(
-        [(u, "E", v) for u, v in edge_list], ["subj", "pred", "obj"])
-    got = {r.node: r.label for r in label_propagation(df).collect()}
-    assert got == _py_lpa(edge_list)
-    assert len({got[x] for x in a}) == 1
-    assert len({got[x] for x in b}) == 1
-    assert got["a1"] != got["b1"]
-
-
-@pytest.mark.slow
-def test_label_propagation_vs_python_on_random_graph(spark):
-    """Deterministic LPA equals the reference Python rule on a random
-    graph with self-loops present, and the labeling is identical across
-    input partitionings (the tie-break determinism claim)."""
-    import random
-
-    from smart_pdf_md_spark.operators.graph import label_propagation
-
-    rng = random.Random(7)
-    nodes = [f"n{i}" for i in range(12)]
-    edge_list = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(15)}
-    edge_list |= {("c0", "c1"), ("c1", "c2"), ("c0", "c2"), ("c2", "n0")}
-    df = spark.createDataFrame(
-        [(u, "E", v) for u, v in edge_list], ["subj", "pred", "obj"])
-    got = {r.node: r.label for r in label_propagation(df).collect()}
-    assert got == _py_lpa(edge_list)
-    got8 = {r.node: r.label
-            for r in label_propagation(df.repartition(8)).collect()}
-    assert got8 == got
 
 
 def test_adaptive_quality_filter_exact_rank_and_duckdb_parity(spark):
@@ -338,135 +217,3 @@ def test_verify_stage_digests_partitioning_invariant(spark, tmp_path):
 
     diff = verify_stage_digests(spark, ra, rc_, ["triples"])["triples"]
     assert not diff["match"] and diff["rows_b"] == 499
-
-
-def _py_k_truss(edge_list, k):
-    """Reference peeling in plain Python: support = common-neighbor count."""
-    edges = {tuple(sorted(e)) for e in edge_list if e[0] != e[1]}
-    while True:
-        adj: dict[str, set[str]] = {}
-        for u, v in edges:
-            adj.setdefault(u, set()).add(v)
-            adj.setdefault(v, set()).add(u)
-        support = {(u, v): len(adj[u] & adj[v]) for u, v in edges}
-        drop = {e for e, s in support.items() if s < k - 2}
-        if not drop:
-            return support
-        edges -= drop
-
-
-def test_k_truss_small_fast(spark):
-    """Fast k-truss representative for the default selection (ADVICE r5:
-    the only parity test was slow-marked): a K4 with a pendant tail — the
-    3-truss is exactly the K4's 6 edges (support 2 each), the tail edge
-    dissolves; bad arguments raise instead of UnboundLocalError."""
-    from smart_pdf_md_spark.operators.graph import k_truss
-
-    k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-          ("c", "d"), ("d", "e")]  # + pendant d—e
-    df = spark.createDataFrame([(u, "E", v) for u, v in k4],
-                               ["subj", "pred", "obj"])
-    got = {(r.u, r.v): r.support for r in k_truss(df, 4).collect()}
-    assert got == {(u, v): 2 for u, v in k4[:6]}
-    with pytest.raises(ValueError, match="max_iter"):
-        k_truss(df, 3, max_iter=0)
-    with pytest.raises(ValueError, match="k must be"):
-        k_truss(df, 1)
-
-
-@pytest.mark.slow
-def test_k_truss_vs_python_peeling(spark):
-    """k-truss edges AND in-truss supports equal a reference Python peeling
-    on a random graph plus a planted K5 (whose edges each close 3 triangles
-    → it survives the 5-truss while the sparse background dissolves)."""
-    import random
-
-    from smart_pdf_md_spark.operators.graph import k_truss
-
-    rng = random.Random(43)
-    nodes = [f"n{i}" for i in range(30)]
-    edge_list = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)}
-    clique = ["c0", "c1", "c2", "c3", "c4"]
-    edge_list |= {(a, b) for a in clique for b in clique if a < b}
-    df = spark.createDataFrame(
-        [(u, "E", v) for u, v in edge_list], ["subj", "pred", "obj"])
-
-    for k in (2, 3, 4, 5):
-        got = {(r.u, r.v): r.support for r in k_truss(df, k).collect()}
-        assert got == _py_k_truss(edge_list, k), f"k={k}"
-    # the planted K5 is exactly a 5-truss core
-    t5 = _py_k_truss(edge_list, 5)
-    assert {(a, b) for a in clique for b in clique if a < b} <= set(t5)
-
-
-def test_adaptive_quality_filter_sketch_tracks_exact(spark):
-    """The sketch form (no per-stratum corpus sort): kept fraction per
-    stratum lands in [frac, frac + cut-bucket mass]; bucket-granular
-    dominance (no kept doc a full bucket below a dropped doc of its
-    stratum); partition-invariant; the plan has no corpus-sized Sort."""
-    import io
-    from contextlib import redirect_stdout
-
-    import random
-
-    from smart_pdf_md_spark.operators.textstats import (
-        adaptive_quality_filter,
-        adaptive_quality_filter_sketch,
-    )
-
-    rng = random.Random(11)
-    stops = "the of and to in it is was for on".split()
-    rows = []
-    for i in range(400):
-        lang = "en" if i % 2 else "de"
-        # graded quality: longer + stopword-richer as i grows
-        n_stop = 1 + (i % 40)
-        body = " ".join(rng.choice(stops) for _ in range(n_stop)) + " " + \
-            " ".join(f"w{i}x{j}" for j in range(5 + (i % 60)))
-        rows.append((i, body, lang))
-    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-
-    frac, k = 0.8, 64
-    got = adaptive_quality_filter_sketch(docs, frac=frac, k=k)
-    kept = got.select("doc_id", "lang", "quality", "q_cut").collect()
-    n_by = {lg: sum(1 for _, t, l in rows if l == lg) for lg in ("en", "de")}
-    kept_by: dict = {}
-    for r in kept:
-        kept_by.setdefault(r.lang, []).append(r)
-        assert r.quality >= r.q_cut or r.quality <= 0
-    for lg, rs in kept_by.items():
-        f = len(rs) / n_by[lg]
-        assert frac - 1e-9 <= f <= 1.0
-    # bucket-granular agreement with the exact form: everything the
-    # exact filter keeps, the sketch keeps too (it cuts at or below the
-    # exact threshold's bucket floor)
-    exact_ids = {r.doc_id for r in
-                 adaptive_quality_filter(docs, frac=frac).collect()}
-    sketch_ids = {r.doc_id for r in kept}
-    assert exact_ids <= sketch_ids
-    # and the overshoot is bounded by the cut bucket's mass: within each
-    # stratum no kept doc sits more than one bucket below the exact cut
-    import math
-    for lg, rs in kept_by.items():
-        exact_min = min(r.quality for r in kept if r.lang == lg and
-                        r.doc_id in exact_ids)
-        for r in rs:
-            if r.quality > 0:
-                assert (math.floor(k * math.log2(r.quality)) >=
-                        math.floor(k * math.log2(exact_min)) - 1)
-
-    got16 = {r.doc_id for r in adaptive_quality_filter_sketch(
-        docs.repartition(16), frac=frac, k=k).collect()}
-    assert got16 == sketch_ids                     # partition-invariant
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        adaptive_quality_filter_sketch(docs, frac=frac, k=k) \
-            .explain("formatted")
-    plan = buf.getvalue()
-    # the histogram walk may sort its (strata x buckets) relation; the
-    # corpus stream itself must reach the filter sort-free. The exact
-    # form's WindowExec over the full corpus is what we are avoiding —
-    # assert no window function consumes the corpus-sized relation (the
-    # only Window here partitions the bucket histogram).
-    assert "percent_rank" not in plan

@@ -383,6 +383,29 @@ def test_torn_commit_never_resumes_the_old_snapshot(spark, run_dir,
     assert sorted(r.k for r in df.collect()) == list(range(5))
 
 
+def test_upstream_commit_during_build_leaves_stage_stale(spark, run_dir):
+    """An upstream append that commits while `down` builds is not what
+    `down` was built from: the next run must rebuild and serve it, not
+    resume the snapshot that misses the appended rows."""
+    from smart_pdf_md_spark.plans.manifests import commit_stage, run_stage
+
+    commit_stage(spark.range(3).selectExpr("id AS k"), run_dir, "up", ["k"])
+
+    def build_while_up_appends():
+        df = read_stage(spark, run_dir, "up")
+        commit_stage(spark.range(3, 5).selectExpr("id AS k"), run_dir, "up",
+                     ["k"], mode="append")
+        return df
+
+    run_stage(spark, run_dir, "down", build_while_up_appends, ["k"],
+              deps=["up"])
+    df, resumed = run_stage(spark, run_dir, "down",
+                            lambda: read_stage(spark, run_dir, "up"), ["k"],
+                            deps=["up"])
+    assert resumed is False
+    assert sorted(r.k for r in df.collect()) == list(range(5))
+
+
 @pytest.mark.slow
 def test_runlog_edges_stage_carries_drop_metrics(spark, corpus_sdf, run_dir,
                                                  tmp_path):
